@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.Locale
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ShuffleRecords
 import graft.ops.{MapReduce, Text}
 
 /** Remap-parity semantics: the typed MR pipeline must agree with the
@@ -18,7 +20,9 @@ class MapReduceSpec extends GraftSuite {
       docs.select("text").as[String],
       // remap map contract: yield (partition_label, k2, v2) — the label
       // mirrors wordcount.py's first-letter ranges and must not matter
-      (text: String) => text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      // Locale.ROOT: default-locale toLowerCase diverges from Catalyst's
+      // lower() under e.g. tr_TR, which the declarative side uses
+      (text: String) => text.toLowerCase(Locale.ROOT).split("\\s+").filter(_.nonEmpty)
         .map(w => (if (w.head <= 'n') "a2n" else "o2z", w, 1)),
       (word: String, ones: Iterator[Int]) => Iterator.single((word, ones.map(_.toLong).sum)))
       .collect().toMap
@@ -38,9 +42,64 @@ class MapReduceSpec extends GraftSuite {
       .mapGroups((w, it) => (w, it.map(_._2).toSet))
       .collect().toMap
     assert(combined == plain)
-    // combiner output must also reach the small flushAt path
-    val tiny = MapReduce.groupWithCombiner(pairs, distinctCombiner)
-    assert(tiny.filter(r => r._2.size != r._2.distinct.size).isEmpty)
+    // the per-task buffer itself: a bound of 1–3 values forces a flush every
+    // few pairs, so each key is spread over many partial rows, and the
+    // partials combined after the shuffle must still equal plain grouping
+    val local = pairs.collect().toSeq
+    val unbounded = local.groupMap(_._1)(_._2)
+    val identityCombiner: Seq[String] => Seq[String] = identity
+    // None is mapReduce's form: no combiner, every value reaches the reducer
+    for (bound <- 1 to 3;
+         combiner <- Seq(None, Some(identityCombiner), Some(distinctCombiner))) {
+      val finish = combiner.getOrElse(identityCombiner)
+      val partials = ops.MapSideGroupAccess(local.iterator, combiner, bound).toSeq
+      assert(partials.length > unbounded.size, s"bound $bound never flushed early")
+      val merged = partials.groupMap(_._1)(_._2).view
+        .mapValues(ps => finish(ps.flatten).sorted).toMap
+      assert(merged == unbounded.view.mapValues(vs => finish(vs).sorted).toMap,
+        s"bound $bound, combiner $combiner")
+    }
+  }
+
+  test("typed mapReduce with tuple keys and nullable values sees every value") {
+    val pairs = docs
+      .select(explode(Text.tokenize(col("text"))).as("word"), col("source"))
+      .as[(String, String)]
+    // k2 = (source, initial); v2 = the word, or null for words of ≤ 3 chars;
+    // the reducer needs every value: the count includes the nulls
+    val typed = MapReduce.mapReduce[(String, String), (String, String), String,
+        (String, String), (Long, String)](
+      pairs,
+      { case (w, s) => Iterator.single(("label", (s, w.take(1)), if (w.length > 3) w else null)) },
+      (k, vs) => {
+        val all = vs.toSeq
+        Iterator.single((k, (all.length.toLong, all.filter(_ != null).maxOption.orNull)))
+      })
+      .collect().toMap
+    val declarative = pairs.toDF("word", "source")
+      .groupBy(col("source"), substring(col("word"), 1, 1))
+      .agg(count(lit(1)), max(when(length(col("word")) > 3, col("word"))))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getString(3)))
+      .toMap
+    assert(declarative.values.exists(_._2 == null), "no all-null group exercised")
+    assert(typed == declarative)
+  }
+
+  test("typed wordcount shuffles one row per distinct word and map task") {
+    val lines = docs.select("text").as[String]
+    val mapTasks = lines.rdd.getNumPartitions
+    val distinctWords = Text.q24Wordcount(spark, sf).count()
+    val records = ShuffleRecords.written(spark) {
+      MapReduce.mapReduce[String, String, Long, String, Long](
+        lines,
+        line => line.toLowerCase(Locale.ROOT).split("\\s+").iterator
+          .filter(_.nonEmpty).map(w => ("_default", w, 1L)),
+        (w, ones) => Iterator.single((w, ones.sum)))
+        .collect()
+    }
+    assert(records > 0 && records <= distinctWords * mapTasks,
+      s"$records shuffle records for $distinctWords words in $mapTasks map tasks")
   }
 
   test("secondarySort orders rows by sort key within every partition") {
@@ -121,5 +180,14 @@ class MapReduceSpec extends GraftSuite {
     val df = Seq("<p>hello <b>big</b> world</p>").toDF("h")
     val out = df.select(Text.htmlStripTags(col("h"))).as[String].head()
     assert(out == "hello big world")
+  }
+}
+
+package ops {
+  /** Test access to the private map-side buffer of [[MapReduce]]. */
+  object MapSideGroupAccess {
+    def apply[K, V](pairs: Iterator[(K, V)], combiner: Option[Seq[V] => Seq[V]],
+                    bound: Int): Iterator[(K, Seq[V])] =
+      MapReduce.mapSideGroup(pairs, combiner, bound)
   }
 }
