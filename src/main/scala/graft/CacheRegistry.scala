@@ -51,21 +51,4 @@ object CacheRegistry {
 
   /** Number of currently tracked frames (test introspection). */
   def trackedCount: Int = frames.size()
-
-  /** Full inter-measurement sweep shared by the measurement harnesses
-    * (SkewAudit, ScaleProbe): blocking registry drain, catalog cache
-    * clear, a sweep of the persistent RDDs neither can see (the Pregel
-    * loops return localCheckpoint'ed results whose blocks stay pinned
-    * until GC), then double-gc so the ContextCleaner's weak-ref work from
-    * the first pass is collected by the second. Bench keeps its own copy
-    * of this sequence inline because it conditions the expensive gc on
-    * whether anything was actually pinned — see Bench.scala. */
-  def drainForMeasurement(spark: org.apache.spark.sql.SparkSession): Unit = {
-    unpersistAll(blocking = true)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    System.gc()
-    System.gc()
-    Thread.sleep(100) // let the ContextCleaner drain before the clock starts
-  }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local[`cpus`] session every driver-facing main (Verify, Bench,
-  * SkewAudit) runs on — one definition, so a config change cannot drift
+/** The local[`cpus`] session every driver-facing main (Verify, Bench)
+  * runs on — one definition, so a config change cannot drift
   * between the correctness and timing surfaces.
   *
   * `canChangeCachedPlanOutputPartitioning` (off by default) lets AQE

@@ -628,7 +628,7 @@ object Similarity {
     * sides on `cluster`, never forming |corpus|² candidates. Training cost
     * is [[kMeans]]'s: one corpus pass per Lloyd round against broadcast
     * centroids — and with k ∝ N that flat argmin is an honest N·k = N²/
-    * ⟨cell⟩ term (SimScaleProbe's `semdedup_cells` row measures it). At
+    * ⟨cell⟩ term (SCALE_PROBE.md's `semdedup_cells` row measured it). At
     * the 100M-doc/100k-cell point use [[semanticDedupIvf]]: two-level
     * routing (coarse Lloyd at ⌈√k⌉ centroids, then per-cell fine Lloyd)
     * drops assignment AND training to N·√k while leaving the pair stage,
@@ -643,7 +643,7 @@ object Similarity {
     * `distinct`. */
   /** k at/above which [[semanticDedup]]'s `"auto"` routing swaps the flat
     * broadcast argmin for [[kMeansIvf]]'s two-level N·√k assignment. Set
-    * from the round-15 IvfCrossoverProbe measurement (SCALE_PROBE.md):
+    * from the round-15 crossover measurement (SCALE_PROBE.md):
     * flat and IVF SemDeDup timed head-to-head end-to-end on the identical
     * corpus and k = n/256 schedule — flat wins at k = 512 (8.9 vs 14.9 s),
     * IVF from k = 1024 on (14.6 vs 12.2 s, then 27.7 vs 17.2 at 2048 and

@@ -46,7 +46,7 @@ object Algorithms {
       // rank/outdeg arithmetic is compute-heavy per row (measured −19%
       // on q219 at 131072 vs the 500k default; see rowsPerLoopPartition)
       blockSize = 3, rowsPerPartition = 131072L)
-      .select(col("id"), col("val").as("pagerank"))
+      .vertices.select(col("id"), col("val").as("pagerank"))
   }
 
   /** Max-value propagation — the "highest" example
@@ -59,7 +59,7 @@ object Algorithms {
     */
   def maxValuePropagation(vertices: DataFrame, edges: DataFrame,
                           maxIter: Int = 50): PregelResult =
-    Pregel.runWithStats(
+    Pregel.run(
       vertices, edges, maxIter,
       sendMsg = col("value"),
       mergeMsg = max,
@@ -80,11 +80,15 @@ object Algorithms {
     * closure, which is exactly what this computes (see q47).
     *
     * @param edges directed rows; pass both directions for undirected CC
+    * @param maxIter superstep cap. The default runs until the halt vote,
+    *        which min-label propagation always reaches (labels only
+    *        decrease); a smaller cap returns unconverged labels — a
+    *        component whose diameter exceeds it splits — with no signal
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          maxIter: Int = 30,
+                          maxIter: Int = Int.MaxValue,
                           durableDir: Option[String] = None): DataFrame =
-    Pregel.runWithStats(
+    Pregel.run(
       vertices.select(col("id"), col("id").as("component")),
       edges, maxIter,
       sendMsg = col("component"),
@@ -167,21 +171,14 @@ object Algorithms {
         least(col("u"), col("v")).as("v"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Pregel's loop-session discipline (see Pregel.runWithStats): each
-    // round runs ~5 shuffles over a GRAPH-sized frame — at the session's
-    // default partition count a small graph pays rounds×shuffles×parts
-    // near-empty tasks of pure scheduler overhead (measured 19s → ~4s on
-    // the q112 corpus at local[32]). Size the loop shuffles to the edge
-    // count; AQE off because the loop sizes its shuffles explicitly.
+    // Pregel's loop session (see Pregel.loopSession): each round runs ~5
+    // shuffles over a GRAPH-sized frame — at the session's default
+    // partition count a small graph pays rounds×shuffles×parts near-empty
+    // tasks of pure scheduler overhead (measured 19s → ~4s on the q112
+    // corpus at local[32]). Size the loop shuffles to the edge count; the
+    // AQE settings are ccLoopConfs' size gate.
     val nE = e.count() // also materializes the edge cache
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.min(sessionParts.toLong, nE / 500000L + 1).toInt
-    val loopSession = {
-      val s = org.apache.spark.sql.graft.GraftSessionBridge.cloneSession(spark)
-      s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      ccLoopConfs(nE).foreach { case (k, v) => s.conf.set(k, v) }
-      s
-    }
+    val (loopSession, _) = Pregel.loopSession(spark, nE, confs = ccLoopConfs(nE))
     e = org.apache.spark.sql.graft.GraftSessionBridge.rebind(e, loopSession)
     val live = scala.collection.mutable.ArrayBuffer(e)
     try {
@@ -201,11 +198,14 @@ object Algorithms {
         // distinct exchange, then re-shuffled ls by u for the join
         // (A/B-pinned: q201 iso median 28.8 → 25.7 s; q112's 50k-edge
         // corpus graph reads +0.5 s of repartition fixed cost, inside
-        // its noise band). The u key here is the round's BIG endpoints
-        // (each carries its few distinct minima), never the star
-        // center, so no hub partition forms and the und⋈lsMin join
-        // above keeps the AQE-splittable shuffle that guards the
-        // genuinely hot center key.
+        // its noise band). The u key here is the round's BIG endpoints,
+        // not the star center, so usually no hub partition forms. The
+        // exception is a max-id hub: a high-degree vertex whose id
+        // exceeds its neighbors' receives one row per neighbor under
+        // its single u key before the dedup, an unsplittable straggler
+        // on such adversarial graphs (results are unaffected). The
+        // und⋈lsMin join above keeps the AQE-splittable shuffle that
+        // guards the star center key.
         val ls = und.join(lsMin, "u").filter(col("v") > col("u"))
           .select(col("v").as("u"), col("m").as("v"))
           .repartition(col("u")).dropDuplicates()
@@ -275,53 +275,47 @@ object Algorithms {
         col("outdeg")),
       // finer loop partitions, same rationale as pageRank (−21% on q236)
       blockSize = 3, rowsPerPartition = 131072L)
-      .select(col("id"), col("val").as("trust"))
+      .vertices.select(col("id"), col("val").as("trust"))
   }
 
   /** k-core: the maximal subgraph where every vertex has degree ≥ k,
     * computed by iterative peeling — remove vertices with degree < k,
-    * remove their edges, repeat until stable. The G7 dynamic-topology
-    * program: each peel round DELETES edge rows between supersteps via the
-    * Pregel `updateEdges` hook (the reference's unsubscribe,
-    * `/root/reference/daemons/core/module_vertex.py:98-102`), so dead
-    * vertices stop contributing degree. blockSize must be 1: peeling
-    * semantics need the topology refreshed after every superstep.
+    * remove their edges, repeat until stable. The G7 edge-DELETION
+    * program: a dead vertex unsubscribes (the reference's unsub,
+    * `/root/reference/daemons/core/module_vertex.py:98-102`) by sending
+    * nothing — `sendMsg` is gated on its own `alive` state, so dead
+    * vertices stop contributing degree from the superstep after they die.
     *
-    * Messages carry each edge's +1 degree contribution; a vertex dies when
-    * its degree drops below k, votes halt when its state is unchanged.
+    * Messages carry each live edge's +1 degree contribution; a vertex dies
+    * when its degree drops below k, votes halt when its state is unchanged.
     * Returns every input vertex with an `in_core` flag.
     *
     * @param edges directed rows; pass both directions for the undirected
     *              degree semantics k-core assumes
     */
   def kCore(vertices: DataFrame, edges: DataFrame, k: Int,
-            maxIter: Int = 50): DataFrame = {
-    val dropDead = (e: DataFrame, v: DataFrame, _: Int) => {
-      val alive = v.filter(col("alive")).select(col("id"))
-      e.join(alive.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(alive.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-    }
+            maxIter: Int = 50): DataFrame =
     Pregel.run(
       vertices.select(col("id"), lit(true).as("alive")),
       edges, maxIter,
-      sendMsg = lit(1L),
+      sendMsg = when(col("alive"), lit(1L)),
       mergeMsg = sum,
       vprog = (df, _) => df.select(
         col("id"),
         (col("alive") && coalesce(col("msg"), lit(0L)) >= k).as("alive"),
         // halt unless this round changed the vertex's fate
         ((col("alive") && coalesce(col("msg"), lit(0L)) >= k) === col("alive"))
-          .as("halt")),
-      blockSize = 1,
-      updateEdges = Some(dropDead))
-      .select(col("id"), col("alive").as("in_core"))
-  }
+          .as("halt")))
+      .vertices.select(col("id"), col("alive").as("in_core"))
 
   /** Incremental connected components — the G7 edge-ADDITION counterpart
     * of [[kCore]]'s deletion-only peeling: edges arrive in WAVES, wave w
-    * joining the live topology at the block boundary before superstep w
-    * (the reference's subscribe — a vertex starts hearing from NEW sources
-    * mid-computation, `/root/reference/daemons/core/module_vertex.py:98-102`).
+    * carrying messages from superstep w on (the reference's subscribe — a
+    * vertex starts hearing from NEW sources mid-computation,
+    * `/root/reference/daemons/core/module_vertex.py:98-102`). Every edge
+    * is cached once with its wave; each vertex carries the index `t` of
+    * the superstep it is about to run in its state, and `sendMsg` is
+    * gated on `wave <= t`, so an edge is silent until its wave arrives.
     *
     * A converged region can be re-awakened by a later wave's edges, so a
     * vertex may not vote halt while waves are still arriving — the vote is
@@ -341,24 +335,20 @@ object Algorithms {
                             maxIter: Int = 30): DataFrame = {
     require(maxIter > lastWave,
       s"maxIter=$maxIter leaves no supersteps after the last wave ($lastWave)")
-    val grow = (_: DataFrame, _: DataFrame, step: Int) =>
-      allEdges.filter(col(waveCol) <= step).select(col("src"), col("dst"))
     Pregel.run(
-      vertices.select(col("id"), col("id").as("component")),
-      allEdges.filter(col(waveCol) <= 0).select(col("src"), col("dst")),
+      vertices.select(col("id"), col("id").as("component"), lit(0).as("t")),
+      allEdges.select(col("src"), col("dst"), col(waveCol).as("wave")),
       maxIter,
-      sendMsg = col("component"),
+      sendMsg = when(col("wave") <= col("t"), col("component")),
       mergeMsg = min,
       vprog = (df, step) => df.select(
         col("id"),
         least(col("component"), coalesce(col("msg"), col("component")))
           .as("component"),
+        lit(step + 1).as("t"),
         (lit(step >= lastWave) &&
-          coalesce(col("msg") >= col("component"), lit(true))).as("halt")),
-      // blockSize 1: the topology must refresh between EVERY pair of
-      // supersteps or a wave would arrive one step late vs the contract
-      blockSize = 1,
-      updateEdges = Some(grow))
+          coalesce(col("msg") >= col("component"), lit(true))).as("halt")))
+      .vertices.select(col("id"), col("component"))
   }
 
   // --------------------------------------------------------------- queries
@@ -480,7 +470,12 @@ object Algorithms {
     * (Pregel's lineage cadence): every normalize references its raw frame
     * TWICE (the scores and the max), so an uncut plan would double per
     * half-step — 2²⁴ nodes by iteration 12, OOM in plan stringification
-    * long before execution cost matters. */
+    * long before execution cost matters.
+    *
+    * Memory: the run pins TWO full copies of the edge set (one per join
+    * orientation, below) — twice the edge cache of a single-orientation
+    * loop. A caller whose graph crowds executor memory can trade one
+    * orientation back for an edge-side Exchange per half-step. */
   def hits(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     // One edge cache per join orientation, each hash-partitioned on the
     // key its half-step joins on (the Pregel loop's edge-cache
@@ -781,7 +776,7 @@ object Algorithms {
         // halt unless this round strictly improved the distance
         (least(col("dist"), col("msg")) <=> col("dist")).as("halt")),
       // min-relaxation is monotone: the converged state is a fixed point
-      blockSize = 3)
+      blockSize = 3).vertices
 
   // --- q199_widest_path: max-bottleneck capacity from a source ------------
   /** Widest-path (max-bottleneck): for every vertex, the best achievable
@@ -809,7 +804,7 @@ object Algorithms {
         col("id"),
         greatest(col("width"), col("msg")).as("width"),
         (greatest(col("width"), col("msg")) <=> col("width")).as("halt")),
-      blockSize = 3)
+      blockSize = 3).vertices
 
   def q199WidestPath(spark: SparkSession, dir: String): DataFrame =
     widestPath(
@@ -854,10 +849,10 @@ object Algorithms {
     * 10-block hub, every hub at its 100-block superhub (diameter ≤ 4, so
     * labels settle within a few supersteps of the last wave) — with each
     * undirected edge assigned wave (src+dst) mod 3. The edges of waves 1
-    * and 2 do NOT exist when the run starts; they are ADDED mid-run by the
-    * `updateEdges` hook. The oracle is a recursive-CTE closure over the
-    * FULL edge set: it passes only because the incremental run reaches the
-    * schedule-independent fixed point. */
+    * and 2 carry no messages when the run starts; they join mid-run, at
+    * supersteps 1 and 2 (the wave-gated send). The oracle is a
+    * recursive-CTE closure over the FULL edge set: it passes only because
+    * the incremental run reaches the schedule-independent fixed point. */
   def q88IncrementalCc(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val fwdRaw = docs.select(col("doc_id").as("src"),
@@ -965,7 +960,7 @@ object Algorithms {
         greatest(col("dist"), col("msg")).as("dist"),
         (greatest(col("dist"), col("msg")) <=> col("dist")).as("halt")),
       // finer loop partitions, same rationale as pageRank (−15% on q226)
-      blockSize = 3, rowsPerPartition = 131072L)
+      blockSize = 3, rowsPerPartition = 131072L).vertices
 
   /** The q92 weighted nation graph restricted to src < dst edges — the
     * wrap-around edges drop, every edge ascends, hence a DAG (depth ≤ 24
@@ -1290,7 +1285,7 @@ object Algorithms {
       // finer loop partitions: the k-slot array merge is the widest
       // per-row state in the registry (−27% on q228 at 131072)
       blockSize = 3, rowsPerPartition = 131072L)
-    res.select(col("id"), posexplode(col("dists")).as(Seq("slot", "d")))
+    res.vertices.select(col("id"), posexplode(col("dists")).as(Seq("slot", "d")))
       .select(col("id"),
         element_at(array(landmarks.map(lit): _*), col("slot") + 1)
           .as("landmark"),
@@ -1687,16 +1682,16 @@ object Algorithms {
 
   // --- q222_kcore_atscale: iterative peeling at ≥1M edges -----------------
   /** At-scale correctness coverage for [[kCore]] — q60 peels 25 nation
-    * keys; this replays the G7 edge-DELETION machinery (blockSize 1,
-    * `updateEdges` dropping dead vertices' rows every superstep) over
+    * keys; this replays the G7 edge-DELETION machinery (dead vertices'
+    * sends gated off from the superstep after they die) over
     * 1.18M directed edges: 49152 blocks of a K₄ clique with a 6-vertex
     * pendant chain. At k=2 the chain peels exactly ONE vertex per round
     * (the free end's degree hits 1 only after its successor died), so
     * six genuine rounds of mid-run topology deletion run at ~1M-edge
     * volume before the clique stabilizes as the 2-core; a premature
-    * halt, a stale edge set, or one peel order bug flips `in_core`
-    * somewhere in 491520 vertices and moves a vertex between the two
-    * closed-form rollup rows. */
+    * halt, a dead vertex still sending, or one peel order bug flips
+    * `in_core` somewhere in 491520 vertices and moves a vertex between
+    * the two closed-form rollup rows. */
   private[graft] val q222Blocks = 49152L
 
   private[graft] def q222Edges(spark: SparkSession,

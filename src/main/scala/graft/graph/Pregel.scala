@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSessionBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Result of a Pregel run: final vertex state + how many supersteps ran
@@ -27,20 +28,107 @@ final case class PregelResult(vertices: DataFrame, supersteps: Int)
   *   - vote-to-halt (`module_vertex.py:165-179`): a `halt` boolean column
   *     produced by the vertex program; the loop stops when every vertex
   *     votes halt, or at `maxIter` (pagerank's superstep cap,
-  *     `examples/pagerank/pagerank.py:39-43`).
+  *     `examples/pagerank/pagerank.py:39-43`);
+  *   - sub/unsub (G7, `module_vertex.py:98-102`): a vertex deciding from
+  *     its own state whom it talks to. The edge set is cached once and
+  *     never rewired; a program with dynamic topology gates `sendMsg` on
+  *     vertex state or an edge attribute (`when(alive, ...)`,
+  *     `when(wave <= t, ...)`) — a null message is no message. See
+  *     [[Algorithms.kCore]] (deletion) and
+  *     [[Algorithms.incrementalComponents]] (addition).
   *
   * Scale design: vertices and messages both hash-partition on `id`, so the
-  * post-aggregation join can reuse the exchange; per-block state is
-  * persisted (memory-and-disk) and lineage is truncated with a lazy
-  * `localCheckpoint` every `checkpointEvery` supersteps — without it the
-  * join-per-iteration plan grows exponentially and kills the driver long
-  * before 100 TB kills the executors. The loop additionally sizes its
-  * shuffle partitions to the graph (see `runWithStats`) and can batch
+  * post-aggregation join can reuse the exchange; every block of supersteps
+  * ends in ONE lazy `localCheckpoint`, which truncates lineage — without it
+  * the join-per-iteration plan grows exponentially and kills the driver
+  * long before 100 TB kills the executors. The loop additionally sizes its
+  * shuffle partitions to the graph (see [[loopSession]]) and can batch
   * `blockSize` supersteps per plan to amortize Catalyst's fixed planning
   * cost — the two costs that dominate iterative dataflow once per-task
   * work is small.
   */
 object Pregel {
+
+  /** Default target rows per shuffle partition inside a graph loop.
+    * A vertex program can pass a finer `rowsPerPartition` when its
+    * supersteps are compute-heavy per row (wide vector state, per-edge
+    * weight arithmetic): q228's 4-landmark array program dropped 27% at
+    * 131072 rows/partition, pagerank/trustrank/longest-path 10-20% —
+    * while programs with many cheap supersteps over small or shrinking
+    * frontiers (SCC's forward/backward passes, alternating-star CC)
+    * measurably LOSE at finer grain because per-superstep fixed cost
+    * scales with partition count. Both regimes clamp to the session
+    * setting, so cluster-scale graphs keep full parallelism either way. */
+  private[graft] val rowsPerLoopPartition = 500000L
+
+  /** The session a graph loop plans in, and its shuffle partition count.
+    *
+    * Size the loop's shuffles to the GRAPH (`rows`), not the session
+    * default. Cached/checkpointed plans are exempt from AQE partition
+    * coalescing (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    * defaults to false), so every superstep of a small graph would
+    * otherwise pay `spark.sql.shuffle.partitions` near-empty tasks per
+    * shuffle — at local[32] that made a 25-vertex PageRank ~10× slower
+    * than the data justifies, and on a 1000-executor cluster it is the
+    * same waste in scheduler RPCs. At real scale rows/rowsPerPartition
+    * exceeds the session setting and the clamp keeps full parallelism.
+    *
+    * The overrides live on a CLONE of the caller's session (same
+    * SparkContext, catalog, cache manager, runtime conf state, and temp
+    * views — only the SQLConf overrides differ), so concurrent queries on
+    * the caller's session are never planned with loop settings and two
+    * concurrent loops cannot race a save/restore. `confs` are the loop's
+    * AQE settings; the default turns AQE off, because the loop sizes its
+    * shuffles explicitly and per-stage replanning is pure driver overhead
+    * at superstep cadence. */
+  private[graft] def loopSession(
+      spark: SparkSession, rows: Long,
+      rowsPerPartition: Long = rowsPerLoopPartition,
+      confs: Seq[(String, String)] = Seq("spark.sql.adaptive.enabled" -> "false"))
+      : (SparkSession, Int) = {
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val loopParts =
+      math.min(sessionParts.toLong, rows / rowsPerPartition + 1).toInt
+    val s = GraftSessionBridge.cloneSession(spark)
+    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    (s, loopParts)
+  }
+
+  /** Durable-checkpoint support: a long Pregel run (hundreds of supersteps
+    * over a 100 TB-derived graph) must survive a driver loss without
+    * recomputing from superstep 0 — `localCheckpoint` truncates lineage
+    * but dies with the executors. When `durableDir` is set, every block
+    * ALSO writes the vertex state to `durableDir/step_<n>` parquet plus an
+    * atomically-renamed `LATEST` marker (written only AFTER the parquet
+    * commit, so a crash mid-write leaves the previous consistent state
+    * discoverable). On a cluster the directory must be shared storage
+    * (HDFS/S3), like any checkpoint dir. Cost: one extra write job per
+    * block — opt-in for runs whose recompute cost exceeds it.
+    *
+    * [[resumeState]] reads the newest consistent state; pass it as
+    * `vertices` with `startStep` to continue — vprog sees the same
+    * absolute superstep indices it would have seen uninterrupted. */
+  def resumeState(spark: SparkSession,
+                  durableDir: String): Option[(DataFrame, Int)] = {
+    val marker = java.nio.file.Paths.get(durableDir, "LATEST")
+    if (!java.nio.file.Files.exists(marker)) None
+    else {
+      val n = java.nio.file.Files.readString(marker).trim.toInt
+      Some((spark.read.parquet(s"$durableDir/step_$n"), n))
+    }
+  }
+
+  private def writeDurable(v: DataFrame, durableDir: String,
+                           step: Int): Unit = {
+    v.write.mode("overwrite").parquet(s"$durableDir/step_$step")
+    val dir = java.nio.file.Paths.get(durableDir)
+    val tmp = dir.resolve("LATEST.tmp")
+    java.nio.file.Files.writeString(tmp, step.toString)
+    java.nio.file.Files.move(tmp, dir.resolve("LATEST"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 
   /** Run a vertex program.
     *
@@ -49,7 +137,8 @@ object Pregel {
     * @param maxIter  superstep cap (G6)
     * @param sendMsg  message payload, evaluated per out-edge over the
     *                 vertex⋈edges triplet (vertex state + edge attrs);
-    *                 null = send nothing (G2's `forward`)
+    *                 null = send nothing (G2's `forward`, and G7's
+    *                 sub/unsub when gated on state)
     * @param mergeMsg commutative+associative aggregation over the `msg`
     *                 column — Catalyst makes it a partial agg, i.e. the
     *                 map-side combine remap never had
@@ -76,134 +165,36 @@ object Pregel {
     * even a cap of 6 made the 27-superstep q33 4× slower (26.9s vs 6.4s at
     * fixed blockSize=3; sf0.1, local[32]). blockSize=3 is the measured
     * sweet spot for this loop's join+agg+join superstep shape.
-    *
-    * @param updateEdges G7 dynamic topology — the reference lets a vertex
-    *                 subscribe/unsubscribe topics mid-computation
-    *                 (`module_vertex.py:98-102`), i.e. rewire who it hears
-    *                 from. Edges are just a DataFrame here, so the hook is
-    *                 `(edges, vertices, nextStep) => edges'`, applied at
-    *                 every BLOCK boundary (the new frame is re-persisted and
-    *                 the old cache dropped). Within a block the topology is
-    *                 frozen — programs whose semantics need edge updates
-    *                 after every superstep (k-core peeling) must run with
-    *                 blockSize = 1.
+    * @param durableDir write the state of every block there (see
+    *                 [[resumeState]])
+    * @param startStep absolute index of the first superstep (resume)
+    * @param rowsPerPartition loop shuffle grain (see [[rowsPerLoopPartition]])
     */
   def run(vertices: DataFrame, edges: DataFrame, maxIter: Int,
           sendMsg: Column, mergeMsg: Column => Column,
           vprog: (DataFrame, Int) => DataFrame,
-          checkpointEvery: Int = 2, blockSize: Int = 1,
-          updateEdges: Option[(DataFrame, DataFrame, Int) => DataFrame] = None,
-          rowsPerPartition: Long = rowsPerLoopPartition): DataFrame =
-    runWithStats(vertices, edges, maxIter, sendMsg, mergeMsg, vprog,
-      checkpointEvery, blockSize, updateEdges,
-      rowsPerPartition = rowsPerPartition).vertices
-
-  /** Default target rows per shuffle partition inside the superstep loop.
-    * A vertex program can pass a finer `rowsPerPartition` when its
-    * supersteps are compute-heavy per row (wide vector state, per-edge
-    * weight arithmetic): q228's 4-landmark array program dropped 27% at
-    * 131072 rows/partition, pagerank/trustrank/longest-path 10-20% —
-    * while programs with many cheap supersteps over small or shrinking
-    * frontiers (SCC's forward/backward passes, alternating-star CC)
-    * measurably LOSE at finer grain because per-superstep fixed cost
-    * scales with partition count. Both regimes clamp to the session
-    * setting, so cluster-scale graphs keep full parallelism either way. */
-  private val rowsPerLoopPartition = 500000L
-
-  /** Durable-checkpoint support: a long Pregel run (hundreds of supersteps
-    * over a 100 TB-derived graph) must survive a driver loss without
-    * recomputing from superstep 0 — `localCheckpoint` truncates lineage
-    * but dies with the executors. When `durableDir` is set, every
-    * lineage-truncation point ALSO writes the vertex state to
-    * `durableDir/step_<n>` parquet plus an atomically-renamed `LATEST`
-    * marker (written only AFTER the parquet commit, so a crash mid-write
-    * leaves the previous consistent state discoverable). On a cluster the
-    * directory must be shared storage (HDFS/S3), like any checkpoint dir.
-    * Cost: one extra write job per durable checkpoint — opt-in for runs
-    * whose recompute cost exceeds it.
-    *
-    * [[resumeState]] reads the newest consistent state; pass it as
-    * `vertices` with `startStep` to continue — vprog sees the same
-    * absolute superstep indices it would have seen uninterrupted. */
-  def resumeState(spark: org.apache.spark.sql.SparkSession,
-                  durableDir: String): Option[(DataFrame, Int)] = {
-    val marker = java.nio.file.Paths.get(durableDir, "LATEST")
-    if (!java.nio.file.Files.exists(marker)) None
-    else {
-      val n = java.nio.file.Files.readString(marker).trim.toInt
-      Some((spark.read.parquet(s"$durableDir/step_$n"), n))
-    }
-  }
-
-  private def writeDurable(v: DataFrame, durableDir: String,
-                           step: Int): Unit = {
-    v.write.mode("overwrite").parquet(s"$durableDir/step_$step")
-    val dir = java.nio.file.Paths.get(durableDir)
-    val tmp = dir.resolve("LATEST.tmp")
-    java.nio.file.Files.writeString(tmp, step.toString)
-    java.nio.file.Files.move(tmp, dir.resolve("LATEST"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  def runWithStats(vertices: DataFrame, edges: DataFrame, maxIter: Int,
-                   sendMsg: Column, mergeMsg: Column => Column,
-                   vprog: (DataFrame, Int) => DataFrame,
-                   checkpointEvery: Int = 2, blockSize: Int = 1,
-                   updateEdges: Option[(DataFrame, DataFrame, Int) => DataFrame] = None,
-                   durableDir: Option[String] = None,
-                   startStep: Int = 0,
-                   rowsPerPartition: Long = rowsPerLoopPartition): PregelResult = {
+          blockSize: Int = 1,
+          durableDir: Option[String] = None,
+          startStep: Int = 0,
+          rowsPerPartition: Long = rowsPerLoopPartition): PregelResult = {
     require(vertices.columns.contains("id"), "vertices need an `id` column")
     require(edges.columns.contains("src") && edges.columns.contains("dst"),
       "edges need `src` and `dst` columns")
     require(blockSize >= 1, "blockSize must be >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     require(startStep >= 0, "startStep must be >= 0")
 
     val spark = vertices.sparkSession
     var e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var v: DataFrame = null
-    var prev: DataFrame = null
-    var staleE: DataFrame = null
-    var step = startStep
-    var allHalt = false
     // everything after the first persist sits inside the try so a failure
     // anywhere — including setup (materializing the edge cache can run a
     // whole dedup pipeline for q47) — unpersists in the finally
     try {
-    v = vertices.localCheckpoint(true)
-
-    // Size the superstep shuffles to the GRAPH, not the session default.
-    // Cached/checkpointed plans are exempt from AQE partition coalescing
-    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults
-    // to false), so every superstep of a small graph would otherwise pay
-    // `spark.sql.shuffle.partitions` near-empty tasks per shuffle — at
-    // local[32] that made a 25-vertex PageRank ~10× slower than the data
-    // justifies, and on a 1000-executor cluster it is the same waste in
-    // scheduler RPCs. At real scale rows/rowsPerPartition exceeds the
-    // session setting and the clamp keeps full parallelism.
+    var v = vertices.localCheckpoint(true)
     val nEdges = e.count() // also materializes the edge cache
     val nVerts = v.count() // cheap: v is checkpointed
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.min(sessionParts.toLong,
-      math.max(nVerts, nEdges) / rowsPerPartition + 1).toInt
-
-    // The loop's conf overrides live on a CLONE of the caller's session
-    // (same SparkContext, catalog, cache manager, runtime conf state, and
-    // temp views — only the SQLConf overrides below differ), so concurrent
-    // queries on the caller's session are never planned with loop settings
-    // and two concurrent Pregel runs cannot race a save/restore. AQE is
-    // off in the clone: the loop sizes its shuffles explicitly, and AQE's
-    // per-stage replanning is pure driver overhead at superstep cadence.
-    val loopSession = {
-      val s = org.apache.spark.sql.graft.GraftSessionBridge.cloneSession(spark)
-      s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s
-    }
-    def inLoop(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.GraftSessionBridge.rebind(df, loopSession)
+    val (session, loopParts) =
+      loopSession(spark, math.max(nVerts, nEdges), rowsPerPartition)
+    def inLoop(df: DataFrame): DataFrame = GraftSessionBridge.rebind(df, session)
 
     // Re-cache the edges HASH-PARTITIONED AND SORTED on `src`, the
     // triplets join's key (guide §2.4: operations keyed the same way
@@ -230,7 +221,8 @@ object Pregel {
     if (v.queryExecution.toRdd.getNumPartitions > 2 * loopParts)
       v = v.coalesce(loopParts).localCheckpoint(true)
     v = inLoop(v)
-    var sinceCkpt = 0
+    var step = startStep
+    var allHalt = false
     while (step < maxIter && !allHalt) {
       val block = math.min(blockSize, maxIter - step)
       // Compose `block` supersteps into one lazy plan. Plan aliases (not
@@ -252,90 +244,32 @@ object Pregel {
         voteToHalt = nv0.columns.contains("halt")
         cur = nv0
       }
+      step += block
 
-      // Materialize once per block (bounded lineage between checkpoints);
-      // hard-truncate lineage every `checkpointEvery` supersteps. The
-      // checkpoint is LAZY: the halt-check action below materializes it in
-      // the same Spark job — an eager checkpoint would run a second job per
-      // checkpointed block for nothing.
-      sinceCkpt += block
-      val didCkpt = sinceCkpt >= checkpointEvery
-      val nv =
-        if (didCkpt) { sinceCkpt = 0; cur.localCheckpoint(false) }
-        else cur.persist(StorageLevel.MEMORY_AND_DISK)
-      // durable state rides the same cadence as lineage truncation: the
-      // write job materializes the lazy checkpoint, and the halt action
-      // below then reads the cache — one write job is the entire overhead
-      if (didCkpt && durableDir.isDefined)
-        writeDurable(nv, durableDir.get, step + block)
+      // One materialization per block: a LAZY local checkpoint, which the
+      // durable write or the halt action below materializes in the same
+      // Spark job — an eager checkpoint would run a second job per block
+      // for nothing. Superseded generations are left to the
+      // ContextCleaner (unpersist is a no-op on a checkpoint's plan).
+      v = cur.localCheckpoint(false)
+      durableDir.foreach(writeDurable(v, _, step))
       // The halt vote is an AGGREGATE, not filter(...).isEmpty: isEmpty is
       // a limit(1) that can stop after the first non-halting partition,
-      // leaving this block's cache partially materialized — the next block
-      // would then silently recompute the missing partitions from lineage.
-      // bool_and scans every partition, so the same job that answers the
-      // vote also finishes the materialization (empty frame → vacuous halt).
+      // leaving this block's checkpoint partially materialized — the next
+      // block would then silently recompute the missing partitions from
+      // lineage. bool_and scans every partition, so the same job that
+      // answers the vote also finishes the materialization (empty frame →
+      // vacuous halt).
       allHalt =
         if (voteToHalt)
           // collect-ok: 1-row bool_and aggregate — the BSP halt vote
-          nv.agg(coalesce(bool_and(col("halt")), lit(true)))
+          v.agg(coalesce(bool_and(col("halt")), lit(true)))
             .head().getBoolean(0)                       // action → barrier
-        else { nv.count(); false }                      // action → barrier
-
-      if (prev != null) prev.unpersist(false)
-      prev = v
-      v = nv
-      step += block
-
-      // The PREVIOUS generation's edge cache retires only now: the current
-      // e's first materialization (this block's halt action, which scanned
-      // every partition) read through it, so dropping it any earlier would
-      // have forced a recompute mid-block. One extra cached generation
-      // buys zero extra jobs per block.
-      if (staleE != null) { staleE.unpersist(false); staleE = null }
-
-      // G7: rewire the topology between blocks. The new frame hard-truncates
-      // lineage on the same cadence as the vertex side — an edge chain of
-      // persists across hundreds of blocks would otherwise recompute
-      // transitively on eviction. No action here: the next block's halt
-      // vote materializes it in the same job that materializes the
-      // vertices (an eager count() would be one extra job per block).
-      if (!allHalt && step < maxIter && updateEdges.isDefined) {
-        val ne0 = updateEdges.get(e, nv, step)
-        // A no-op hook (returning the edge frame, or an equal plan) must
-        // NOT rotate the cache: persist() on an already-cached plan is a
-        // no-op in the shared CacheManager, so the staleE.unpersist would
-        // evict the LIVE cache and every later superstep would recompute
-        // the edge lineage (which can hold a whole dedup pipeline).
-        if (!(ne0 eq e) &&
-            ne0.queryExecution.logical != e.queryExecution.logical) {
-          // rewired topology keeps the same cache discipline: partitioned
-          // and sorted on `src` so the next blocks' joins stay
-          // exchange-free on the edge side (the hook output usually ends
-          // hash-partitioned on some OTHER key — kCore's alive-filter
-          // ends on `dst` — so without this every post-rewire join
-          // re-shuffles the edge set anyway; the explicit repartition
-          // pays the same one shuffle and then feeds every later block)
-          val nePlan = inLoop(ne0).repartition(loopParts, col("src"))
-            .sortWithinPartitions("src")
-          staleE = e
-          e = if (didCkpt) nePlan.localCheckpoint(false)
-              else nePlan.persist(StorageLevel.MEMORY_AND_DISK)
-        }
-      }
+        else { v.count(); false }                       // action → barrier
     }
 
-    // hand the result back on the CALLER's session
-    val result = org.apache.spark.sql.graft.GraftSessionBridge
-      .rebind(v.drop("halt").localCheckpoint(true), spark)
-    PregelResult(result, step)
-    } finally {
-      // also the exception path: without these a failure anywhere above
-      // would leave the edge cache and the last vertex frames pinned for
-      // the session's lifetime
-      if (prev != null) prev.unpersist(false)
-      if (v != null) v.unpersist(false)
-      if (staleE != null) staleE.unpersist(false)
-      e.unpersist(false)
-    }
+    // v is already a checkpoint: hand it back on the CALLER's session
+    PregelResult(GraftSessionBridge.rebind(v.drop("halt"), spark), step)
+    } finally e.unpersist(false)
   }
 }

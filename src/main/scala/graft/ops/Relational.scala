@@ -785,7 +785,7 @@ object Relational {
     q246Run(spark, q246Rows)
 
   /** The q246 pipeline parameterized by row count — the gate pins it at
-    * [[q246Rows]]; RelScaleProbe scales it for the Expand exponent. */
+    * [[q246Rows]]; other row counts measure the Expand exponent. */
   private[graft] def q246Run(spark: SparkSession, rows: Long): DataFrame =
     spark.range(rows).select(
         pmod(col("id"), lit(16L)).as("g1"),

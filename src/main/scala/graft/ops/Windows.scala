@@ -1034,8 +1034,7 @@ object Windows {
     * contends in phase 1 rather than one tail slice holding all winners.
     * At the gate size (2²¹ rows) all products stay below 2⁵²; more
     * generally the arithmetic fits exact 64-bit integers in BOTH engines
-    * (RelScaleProbe drives this generator to 2²⁴ rows, where products
-    * pass 2⁵² but remain exact BIGINT — only a DOUBLE round-trip would
+    * (at 2²⁴ rows products pass 2⁵² but remain exact BIGINT — only a DOUBLE round-trip would
     * lose bits, and neither engine takes one); the oracle is DuckDB's
     * own naive one-window plan over the
     * same generated frame — an independent implementation of the total

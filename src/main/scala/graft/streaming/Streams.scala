@@ -846,8 +846,7 @@ object Streams {
     q206Run(spark, q206Users)
 
   /** The q206 runtime parameterized by user count — the gate pins it at
-    * [[q206Users]]; [[graft.StreamStateProbe]] re-runs it at 1×/4× to
-    * measure fMGWS state-store growth. */
+    * [[q206Users]]; other user counts measure fMGWS state-store growth. */
   private[graft] def q206Run(spark: SparkSession, users: Long): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     // state-sized shuffle partitions for the stateful runtime — see

@@ -307,7 +307,7 @@ class GraftPropertiesSpec extends GraftSuite {
         .map { case (v, i) => (i.toLong, v) }.toDF("id", "value")
       val edges = ((0 until n).map(i => (i.toLong, ((i + 1) % n).toLong)) ++
         extra.map { case (a, b) => (a.toLong, b.toLong) }).toDF("src", "dst")
-      def run(bs: Int) = Pregel.runWithStats(
+      def run(bs: Int) = Pregel.run(
           vertices, edges, maxIter = 40,
           sendMsg = col("value"),
           mergeMsg = max,
@@ -428,7 +428,7 @@ class GraftPropertiesSpec extends GraftSuite {
   }
 
   test("property: edge-addition CC equals full-graph recomputation") {
-    // G7 growth: waves 1 and 2 are ADDED mid-run by updateEdges; the fixed
+    // G7 growth: waves 1 and 2 start sending mid-run (wave-gated); the fixed
     // point must be schedule-independent, i.e. identical to CC over the
     // full edge set — on any random graph, including chains (worst-case
     // propagation diameter) and wave sets with no wave-0 edges at all
@@ -451,6 +451,37 @@ class GraftPropertiesSpec extends GraftSuite {
           edges.select("src", "dst"), maxIter = n + 6)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"seed $s")
+    }
+  }
+
+  test("property: state-gated kCore equals a from-scratch peel loop") {
+    // G7 deletion: a dead vertex stops sending its degree contribution —
+    // checked against a plain-Scala loop that recomputes degrees over the
+    // surviving edges every round, on random graphs (sparse ones peel in
+    // long chains, dense ones keep a core) for k = 2 and 3
+    val gen = for {
+      n <- Gen.choose(6, 20)
+      m <- Gen.choose(n, 3 * n)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
+    } yield (n, es)
+    for (s <- 1L to 3L; k <- Seq(2, 3)) {
+      val (n, es) = sample(gen, s)
+      val dir = es.collect { case (a, b) if a != b => (a.toLong, b.toLong) }
+      val und = (dir ++ dir.map(_.swap)).distinct
+      var alive = (0L until n.toLong).toSet
+      var changed = true
+      while (changed) {
+        val deg = und.filter(e => alive(e._1) && alive(e._2))
+          .groupBy(_._1).view.mapValues(_.size).toMap
+        val next = alive.filter(v => deg.getOrElse(v, 0) >= k)
+        changed = next != alive
+        alive = next
+      }
+      val got = Algorithms.kCore((0L until n.toLong).toDF("id"),
+          und.toDF("src", "dst"), k, maxIter = n + 2)
+        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      assert(got.keySet == (0L until n.toLong).toSet, s"seed $s k=$k")
+      assert(got.filter(_._2).keySet == alive, s"seed $s k=$k")
     }
   }
 

@@ -92,27 +92,31 @@ class PregelSpec extends GraftSuite {
 
   test("updateEdges hook can ADD edges mid-run (subscribe parity)") {
     // The reference's subscribe(): a vertex starts hearing a new topic
-    // mid-computation. Here the 1→2 link only exists from superstep 2 on —
-    // a static-topology run provably leaves vertex 2 at its initial value
-    // (previous test), so 2 reaching 9 proves the mid-run rewire.
+    // mid-computation. Here the 1→2 link carries messages only from
+    // superstep 1 on: the edge's `from` column gates the send against the
+    // superstep index `t` each vertex carries in its state. A static
+    // topology without that edge leaves vertex 2 at its initial value
+    // (previous test), so 2 reaching 9 proves the mid-run subscribe.
     val v = Seq((0L, 9L), (1L, 1L), (2L, 1L)).toDF("id", "value")
-    val e = Seq((0L, 1L)).toDF("src", "dst")
-    val addLate = (edges: org.apache.spark.sql.DataFrame,
-                   _: org.apache.spark.sql.DataFrame, step: Int) =>
-      if (step == 1) edges.union(Seq((1L, 2L)).toDF("src", "dst")) else edges
-    val res = Pregel.run(v, e, maxIter = 10,
-      sendMsg = col("value"), mergeMsg = max,
-      vprog = (df, _) => df.select(col("id"),
+      .withColumn("t", lit(0))
+    val e = Seq((0L, 1L, 0), (1L, 2L, 1)).toDF("src", "dst", "from")
+    def run(maxIter: Int) = Pregel.run(v, e, maxIter,
+      sendMsg = when(col("from") <= col("t"), col("value")), mergeMsg = max,
+      vprog = (df, step) => df.select(col("id"),
         greatest(col("value"), coalesce(col("msg"), col("value"))).as("value"),
-        coalesce(col("msg") <= col("value"), lit(true)).as("halt")),
-      updateEdges = Some(addLate))
-    val got = res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        lit(step + 1).as("t"),
+        coalesce(col("msg") <= col("value"), lit(true)).as("halt")))
+      .vertices.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val first = run(1)
+    assert(first(1L) == 9L && first(2L) == 1L,
+      s"the 1→2 edge must be silent in superstep 0: $first")
+    val got = run(10)
     assert(got(2L) == 9L, s"edge added at step 1 must carry the max: $got")
   }
 
   test("lineage stays bounded across checkpoint cadence") {
-    // 30 supersteps with checkpointEvery=5 must not blow the plan up —
-    // this is the Pregel-lineage risk from SURVEY §7.
+    // 30 supersteps must not blow the plan up — this is the
+    // Pregel-lineage risk from SURVEY §7; each block's checkpoint cuts it.
     val v = Seq((0L, 0L), (1L, 0L)).toDF("id", "value")
     val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     val res = Pregel.run(
@@ -120,10 +124,23 @@ class PregelSpec extends GraftSuite {
       sendMsg = col("value") + 1,
       mergeMsg = max,
       vprog = (df, _) => df.select(col("id"),
-        greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")),
-      checkpointEvery = 5)
-    val vals = res.select("value").as[Long].collect()
+        greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")))
+    assert(res.supersteps == 30)
+    val vals = res.vertices.select("value").as[Long].collect()
     assert(vals.forall(_ >= 29L))
+  }
+
+  test("connectedComponents runs to convergence by default: a 40-vertex " +
+      "path is one component") {
+    // diameter 39: any fixed superstep cap below it would leave the far
+    // end of the path with its own label, splitting the component silently
+    val n = 40L
+    val path = (0L until n - 1).map(i => (i, i + 1))
+    val got = Algorithms.connectedComponents((0L until n).toDF("id"),
+        (path ++ path.map(_.swap)).toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size == n)
+    assert(got.values.toSet == Set(0L), s"labels: ${got.values.toSet}")
   }
 
   test("triangle counts: known graph, normalization of dups/direction/loops") {
@@ -167,13 +184,12 @@ class PregelSpec extends GraftSuite {
       .toDF("src", "dst")
     def run(v0: org.apache.spark.sql.DataFrame, maxIter: Int, start: Int,
             durable: Option[String]) =
-      Pregel.runWithStats(v0, edges, maxIter,
+      Pregel.run(v0, edges, maxIter,
         sendMsg = col("component"), mergeMsg = min,
         vprog = (df, _) => df.select(col("id"),
           least(col("component"), coalesce(col("msg"), col("component")))
             .as("component"),
           coalesce(col("msg") >= col("component"), lit(true)).as("halt")),
-        checkpointEvery = 2, blockSize = 1,
         durableDir = durable, startStep = start)
     val uninterrupted = run(vertices, 40, 0, None).vertices
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
