@@ -260,8 +260,8 @@ object Bench {
           // exactly once, so one inflated execution IS the recorded
           // number — the r12 driver sweep showed run-once rows absorbing
           // the predecessor's allocation debt (q209 33.9→67.9 s on
-          // unchanged code; isolated reruns reproduced r11 exactly —
-          // SKEW_AUDIT_r13.md). Debt is not always pin-visible
+          // unchanged code; isolated reruns in the round-13 skew audit
+          // reproduced r11 exactly). Debt is not always pin-visible
           // (humongous-object fragmentation, queued ContextCleaner work),
           // so the hadPins gate alone cannot protect them. Corpus rows
           // keep the pin-gated fast path: a full GC on the large driver

@@ -10,6 +10,19 @@ import graft.ops.Text
   * MinHash-LSH near-dedup, SimHash near-dedup, and exact n-gram Jaccard —
   * all banded/bucketed designs that never form an all-pairs join.
   *
+  * The set-similarity detectors share one substrate and differ only in how
+  * they form candidates and which measure they verify:
+  *  - one set builder, [[rankedSets]]: hashed distinct shingle sets sorted
+  *    rarest-first with their PPJoin prefix length and an optional df cap
+  *    (exact Jaccard q35, containment q148); LSH and SimHash keep row-local
+  *    [[hashedSets]] instead, so their path stays shuffle-free up to the
+  *    bucket join;
+  *  - one oversize cap, [[dropOversized]]: a broadcast anti-join against
+  *    keys holding more than the cap (LSH buckets in q31/q70, shingle df in
+  *    q148);
+  *  - one Jaccard verify, [[verifyJaccard]], over `(doc_id, sh)` (q31,
+  *    q35, q41, q70); containment keeps its directed `ratio6` verify.
+  *
   * The reference has no dedup operator; its closest idiom is collation's
   * `list(set(l))` combiner (`/root/reference/examples/collation/
   * collation.py:18-19`). These are the north-star extensions from
@@ -65,109 +78,139 @@ object Dedup {
           .as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** LSH banding: k-length signatures cut into `bands` bands of k/bands
-    * rows; two documents are candidates iff some band hashes identically.
-    * Returns (id_a, id_b) candidate pairs from a bucket equi-join — the
-    * shuffle key is (band, bandHash), so cost scales with bucket sizes,
-    * never |docs|². Buckets larger than `maxBucket` are dropped: a bucket
-    * with thousands of members is a degenerate hash (boilerplate shingle)
-    * whose pairs would dominate cost while being verifiable from other
-    * bands. */
-  /** One (id, band, bandHash) row per document per band — the LSH bucket
-    * index. Shared by the batch self-join ([[lshCandidates]]) and the
-    * incremental probe join ([[incrementalNearDups]]). */
-  private def bandBuckets(withSig: DataFrame, id: String, bands: Int,
-                          sigLen: Int = -1): DataFrame = {
-    // With a statically known signature length the band hash takes its
-    // r = sigLen/bands elements as direct element_at arguments — no
-    // per-band array allocation (slice copies r longs per band per row)
-    // and no 16-struct row before the explode. Measured on the 2²⁰-doc
-    // q253 corpus: 14.1 s → 7.3 s for the band stage (same noop sink,
-    // same JVM). Bucket semantics are unchanged — equal slices hash
-    // equal, unequal ones collide with the same 2⁻⁶⁴ analysis as before
-    // (the bh VALUES differ from the slice-hash formulation, but bh is an
-    // internal grouping key, never an output). The dynamic fallback keeps
-    // the in-plan slice for callers with expression-valued signatures.
-    val bhs =
-      if (sigLen > 0 && sigLen % bands == 0) {
-        val r = sigLen / bands
-        (0 until bands).map { b =>
-          xxhash64((lit(b) +: (1 to r).map(j =>
-            element_at(col("sig"), b * r + j))): _*)
-        }
-      } else {
-        val r = (size(col("sig")) / lit(bands)).cast("int")
-        (0 until bands).map { b =>
-          xxhash64(lit(b), slice(col("sig"), lit(b) * r + 1, r))
-        }
-      }
-    withSig.select(col(id), posexplode(array(bhs: _*)).as(Seq("band", "bh")))
+  // ------------------------------------------- the set-similarity substrate
+
+  /** Hashed distinct shingle sets, df-ranked: the one set builder behind
+    * the prefix-filtered detectors ([[ngramJaccardPairs]],
+    * [[containmentPairs]]). Per document it returns `(doc_id, sh, sz,
+    * plen)`: `sh` is the distinct n-gram shingle set hashed to 64 bits and
+    * sorted rarest-first by (document frequency, token), `sz` = |sh|, and
+    * `plen` = `sz − minInter(sz) + 1` is the PPJoin prefix length for
+    * `threshold` (see [[ngramJaccardPairs]]). `maxPostings`, when given,
+    * is the df cap: shingles in more than that many documents leave the
+    * shingle universe through [[dropOversized]] before ranking, so the
+    * df-attach join's worst task holds ≤ maxPostings rows of one key.
+    * The first frame returned holds the kept `(tok, doc_id, cnt)` rows the
+    * sets were built from — with a cap, the postings index of
+    * [[containmentPairs]].
+    *
+    * Payload and collisions — the argument for every hashed set in this
+    * file ([[hashedSets]], [[weightedNgramJaccardPairs]]' bag counts):
+    * shingles are made distinct as STRINGS (the semantic unit), then every
+    * downstream stage carries `xxhash64(shingle)` (8 bytes) instead of the
+    * ~25+-byte n-gram string. The verify joins shuffle both full `sh`
+    * arrays per candidate row, so token width is the spill multiplier:
+    * the containment verify's shuffle/spill measured 74 GB on the 100×
+    * one-box probe while it carried string arrays, and hashing cut the
+    * payload ~3–4×; intersects compare longs instead of strings. The
+    * prefix filter is pigeonhole-based, so it is exact under any token
+    * encoding. Sizes and intersections differ from the string-level truth
+    * only if two DISTINCT shingles in one compared pair collide in 64
+    * bits — probability ≤ sz²·2⁻⁶⁴ per pair (sz ≈ 10³ → ~5·10⁻¹⁴) — and
+    * xxhash64 is deterministic, so a string-side oracle (DuckDB) either
+    * always or never agrees for a given corpus. */
+  private def rankedSets(docs: DataFrame, id: String, text: String, n: Int,
+                         threshold: Double,
+                         maxPostings: Option[Int]): (DataFrame, DataFrame) = {
+    // persisted: the token rows feed both the df aggregate and the join
+    // back, so the shingle-building subtree evaluates ONCE
+    val sh = CacheRegistry.persist(docs.select(col(id).as("doc_id"),
+      explode(array_distinct(shingles(col(text), n))).as("shingle"))
+      .select(col("doc_id"), xxhash64(col("shingle")).as("tok")))
+    val dfCounts = keyCounts(sh, "tok")
+    val ranked = maxPostings.fold(sh)(dropOversized(sh, dfCounts, _))
+      .join(dfCounts, Seq("tok"))
+    // persisted when capped: the capped rows are then also containment's
+    // container-side postings, and the cache keeps the join's partitioning
+    // on tok, so the candidate join reads them without another shuffle
+    val tokens =
+      if (maxPostings.isDefined) CacheRegistry.persist(ranked) else ranked
+    // persisted: the sets feed every detector's plan several times
+    // (prefix sides, both verify sides) — without the persist the df
+    // aggregation and ranking rerun per reference. At corpus scale it
+    // spills to disk, which still beats recomputation.
+    (tokens, CacheRegistry.persist(tokens
+      .groupBy("doc_id")
+      // groupagg-ok: one document's hashed shingle tokens — doc-sized
+      .agg(sort_array(collect_list(struct(col("cnt"), col("tok"))))
+        .as("ranked"))
+      .select(col("doc_id"),
+        transform(col("ranked"), r => r("tok")).as("sh"),
+        size(col("ranked")).as("sz"))
+      .withColumn("plen",
+        (col("sz") - minInterExpr(threshold, "sz") + 1).cast("int"))))
   }
 
-  def lshCandidates(docs: DataFrame, id: String, sig: Column,
-                    bands: Int, maxBucket: Int = 10000,
-                    sigLen: Int = -1): DataFrame = {
-    val withSig = docs.select(col(id), sig.as("sig"))
-    // persisted: the frame feeds bucket sizing AND the capped self-join,
-    // and its lineage holds the whole signature computation
-    val buckets = CacheRegistry.persist(bandBuckets(withSig, id, bands, sigLen))
-    // Bucket sizes via groupBy.count, NOT a value-keyed window:
-    // count().over(Window.partitionBy(band, bh)) would shuffle every member
-    // of a hot bucket onto ONE task before the size filter runs — and the
-    // degenerate buckets this cap exists to drop are precisely the hot
-    // keys. groupBy.count partial-aggregates map-side (one row per bucket
-    // per map task crosses the wire).
-    //
-    // The cap is applied as a broadcast ANTI-join against the OVERSIZED
-    // buckets (the containmentPairs maxPostings trick), not a shuffled
-    // semi join against the small ones: the small-bucket list is
-    // index-sized (~one key per doc·band), so the semi join shuffled both
-    // its 2²⁴-row sides AND forced a second 2²⁴-row cache; the oversized
-    // list is dropped map-side off the existing bucket cache instead, so
-    // the only full-index shuffles left are the sizing aggregate and the
-    // self-join's own.
-    val bigBuckets = buckets.groupBy("band", "bh")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
-      .select("band", "bh")
-    // not persisted: both self-join sides re-apply the broadcast anti-join
-    // map-side over the cached bucket index — cheaper than materializing a
-    // second index-sized cache just to read it twice.
-    // bcast-ok: buckets with more than maxBucket members — provably
-    // ≤ |docs|·bands/maxBucket rows of two longs (pigeonhole), ~1.7k at 2²⁰
-    val capped =
-      buckets.join(broadcast(bigBuckets), Seq("band", "bh"), "left_anti")
-    capped.as("l")
-      .join(capped.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col(s"l.$id") < col(s"r.$id"))
-      .select(col(s"l.$id").as("id_a"), col(s"r.$id").as("id_b"))
-      .distinct()
-  }
-
-  /** Exact Jaccard over distinct n-gram shingle sets, attached to candidate
-    * pairs via two hash joins. Output: (id_a, id_b, inter, n_a, n_b,
-    * jaccard) — the integer columns make cross-engine comparison exact. */
-  private def verifyJaccard(pairs: DataFrame, docs: DataFrame, id: String,
-                            text: String, n: Int, threshold: Double): DataFrame = {
-    // persisted: the plan references `sets` twice (side a, side b); without
-    // the persist the whole shingle-building subtree evaluates twice.
-    // Shingle payload: distinct on STRINGS first (the semantic unit), then
-    // the cached sets carry `xxhash64(shingle)` (8 bytes) instead of the
-    // ~25+-byte n-gram string — the two verify joins shuffle BOTH full `sh`
-    // arrays per candidate row, so token width multiplies the spill, and
-    // the intersect compares longs instead of strings (same trick as
-    // [[ngramJaccardPairs]]/[[containmentPairs]], which it cut ~3×).
-    // Correctness: sizes/intersections differ from string-level truth only
-    // if two DISTINCT shingles in one compared pair collide in 64 bits
-    // (≤ sz²·2⁻⁶⁴ per pair), and xxhash64 is deterministic, so the
-    // string-side DuckDB oracle either always or never agrees per corpus.
-    val sets = CacheRegistry.persist(docs.select(col(id).as("vid"),
+  /** Hashed distinct shingle sets `(doc_id, sh)` built row-locally — no
+    * df, no shuffle — for the detectors whose candidates come from LSH or
+    * SimHash banding rather than a df-ranked prefix. Persisted:
+    * [[verifyJaccard]] reads it for both sides of every candidate pair.
+    * Payload and collisions: see [[rankedSets]]. */
+  private def hashedSets(docs: DataFrame, id: String, text: String,
+                         n: Int): DataFrame =
+    CacheRegistry.persist(docs.select(col(id).as("doc_id"),
       transform(array_distinct(shingles(col(text), n)), s => xxhash64(s))
         .as("sh")))
+
+  /** Each document's prefix tokens — the first `plen` of its rarest-first
+    * set — one row per (doc_id, tok). */
+  private def prefixTokens(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"),
+      explode(slice(col("sh"), lit(1), col("plen"))).as("tok"))
+
+  /** `⌈sz·(t − 5·10⁻⁷)⌉` in exact integer arithmetic over the size column
+    * `sz` — the LOWEST intersection the final half-up `round(·, 6) ≥ t`
+    * filter can accept. The PPJoin prefix/length bounds must prune against
+    * THIS, not `⌈sz·t⌉`: a pair whose true ratio is a hair under t still
+    * rounds up to t once sz ≳ 2·10⁶ distinct shingles, and pruning with
+    * the unrounded bound would drop a pair the exact-recompute oracle
+    * keeps. Below that size the two bounds differ by at most 1 — the
+    * relaxation costs one extra prefix element. */
+  private def minInterExpr(threshold: Double, sz: String): Column = {
+    val t7 = math.round(threshold * 1e7) - 5
+    expr(s"($sz * ${t7}L + 9999999L) div 10000000L")
+  }
+
+  /** Rows per key of `rows`, as `(keys…, cnt)`. A groupBy.count, NOT a
+    * value-keyed window: count().over(Window.partitionBy(key)) would
+    * shuffle every row of a hot key — a boilerplate shingle, a degenerate
+    * LSH bucket — onto ONE task before any cap runs, and the hot keys are
+    * exactly what the caps exist to drop. The aggregate partial-aggregates
+    * map-side: one row per key per map task crosses the wire. */
+  private def keyCounts(rows: DataFrame, keys: String*): DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+
+  /** The one oversize cap: drops every row of `rows` whose key holds more
+    * than `cap` rows in `counts` (a [[keyCounts]] frame), as a broadcast
+    * ANTI-join against the oversized keys. The oversized list is small —
+    * at most (counted rows)/cap keys by pigeonhole — while the rows it
+    * drops are the hottest in the frame, so they are dropped map-side and
+    * never cross the wire. The alternatives both shuffle the hot rows: an
+    * inner count-attach join lands a hot key's every row on the one task
+    * owning it, and a shuffled semi join against the SMALL keys shuffles
+    * the whole index plus an index-sized key list. Used by the LSH bucket
+    * cap ([[lshCandidates]], [[incrementalNearDups]]) and the containment
+    * df cap ([[containmentPairs]] via [[rankedSets]]). */
+  private def dropOversized(rows: DataFrame, counts: DataFrame,
+                            cap: Long): DataFrame = {
+    val keys = counts.columns.toSeq.filter(_ != "cnt")
+    // bcast-ok: keys holding more than `cap` rows — at most (counted
+    // rows)/cap of them by pigeonhole, e.g. ~1.7k LSH buckets at 2²⁰ docs
+    rows.join(broadcast(counts.filter(col("cnt") > cap)
+      .select(keys.map(col): _*)), keys, "left_anti")
+  }
+
+  /** The one Jaccard verify: attaches both sides' hashed sets (`doc_id`,
+    * `sh` — from [[rankedSets]] or [[hashedSets]]) to candidate pairs
+    * `(id_a, id_b)` via two hash joins and keeps the pairs whose exact
+    * Jaccard rounds to ≥ threshold. Output: (id_a, id_b, inter, n_a, n_b,
+    * jaccard) — the integer columns make cross-engine comparison exact.
+    * [[containmentPairs]] keeps its own directed verify. */
+  private def verifyJaccard(pairs: DataFrame, sets: DataFrame,
+                            threshold: Double): DataFrame =
     pairs
-      .join(sets.as("sa"), col("id_a") === col("sa.vid"))
-      .join(sets.as("sb"), col("id_b") === col("sb.vid"))
+      .join(sets.as("sa"), col("id_a") === col("sa.doc_id"))
+      .join(sets.as("sb"), col("id_b") === col("sb.doc_id"))
       .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))))
       .withColumn("n_a", size(col("sa.sh")))
       .withColumn("n_b", size(col("sb.sh")))
@@ -176,11 +219,63 @@ object Dedup {
           (col("n_a") + col("n_b") - col("inter")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard")
+
+  // ----------------------------------------------------------- the detectors
+
+  /** One (id, band, bandHash) row per document per band — the LSH bucket
+    * index. Shared by the batch self-join ([[lshCandidates]]) and the
+    * incremental probe join ([[incrementalNearDups]]). The band hash takes
+    * its r = sigLen/bands elements as direct `element_at` arguments: no
+    * per-band array allocation (a `slice` copies r longs per band per row)
+    * and no 16-struct row before the explode — measured on the 2²⁰-doc
+    * q253 corpus at 14.1 s → 7.3 s for the band stage. Equal bands hash
+    * equal; unequal ones collide with probability 2⁻⁶⁴ (bh is an internal
+    * grouping key, never an output). */
+  private def bandBuckets(withSig: DataFrame, id: String, bands: Int,
+                          sigLen: Int): DataFrame = {
+    require(sigLen > 0 && sigLen % bands == 0,
+      s"LSH banding: bands ($bands) must divide the signature length ($sigLen)")
+    val r = sigLen / bands
+    val bhs = (0 until bands).map { b =>
+      xxhash64((lit(b) +: (1 to r).map(j =>
+        element_at(col("sig"), b * r + j))): _*)
+    }
+    withSig.select(col(id), posexplode(array(bhs: _*)).as(Seq("band", "bh")))
+  }
+
+  /** LSH banding: `sigLen`-long signatures cut into `bands` bands of
+    * sigLen/bands rows; two documents are candidates iff some band hashes
+    * identically. Returns (id_a, id_b) candidate pairs from a bucket
+    * equi-join — the shuffle key is (band, bandHash), so cost scales with
+    * bucket sizes, never |docs|². Buckets larger than `maxBucket` are
+    * dropped ([[dropOversized]]): a bucket with thousands of members is a
+    * degenerate hash (boilerplate shingle) whose pairs would dominate cost
+    * while being verifiable from other bands. */
+  def lshCandidates(docs: DataFrame, id: String, sig: Column,
+                    bands: Int, maxBucket: Int = 10000,
+                    sigLen: Int): DataFrame = {
+    // persisted: the bucket index feeds the sizing aggregate AND both
+    // sides of the capped self-join, and its lineage holds the whole
+    // signature computation. The capped frame is not persisted: both
+    // sides re-apply the broadcast anti-join map-side over the cached
+    // index, cheaper than a second index-sized cache read twice.
+    val buckets = CacheRegistry.persist(
+      bandBuckets(docs.select(col(id), sig.as("sig")), id, bands, sigLen))
+    val capped =
+      dropOversized(buckets, keyCounts(buckets, "band", "bh"), maxBucket)
+    capped.as("l")
+      .join(capped.as("r"),
+        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
+          col(s"l.$id") < col(s"r.$id"))
+      .select(col(s"l.$id").as("id_a"), col(s"r.$id").as("id_b"))
+      .distinct()
   }
 
   /** MinHash-LSH near-duplicate detection: shingle → signature → banded
-    * candidates → exact-Jaccard verification. */
-  /** Default banding k=64/b=16 (4 rows per band) balances both failure
+    * candidates → exact-Jaccard verification over row-local
+    * [[hashedSets]].
+    *
+    * Default banding k=64/b=16 (4 rows per band) balances both failure
     * modes, measured on the test corpora:
     *   - recall: k=32/b=8 missed a j≈0.89 boundary pair (per-pair miss
     *     (1−j⁴)⁸ ≈ 4·10⁻⁴); 16 bands square that away (≈2·10⁻⁷);
@@ -196,7 +291,7 @@ object Dedup {
     val withSig = minHashSignatures(docs, id, text, n, k)
     val pairs = lshCandidates(withSig, id, col("sig"), bands, maxBucket,
       sigLen = k)
-    verifyJaccard(pairs, docs, id, text, n, threshold)
+    verifyJaccard(pairs, hashedSets(docs, id, text, n), threshold)
   }
 
   /** Exact n-gram Jaccard with prefix filtering (the AllPairs/PPJoin
@@ -209,81 +304,20 @@ object Dedup {
     * shared shingle (a naive inverted index pairs every pair of docs
     * sharing ANY shingle — millions of background pairs on a 5k-doc
     * corpus, and quadratic blowup on common boilerplate at 100 TB).
-    * Candidates are then verified exactly on the full shingle sets. */
-  /** `⌈sz·(t − 5·10⁻⁷)⌉` in exact integer arithmetic over the `sz` column
-    * — the LOWEST intersection the final half-up `round(·, 6) ≥ t` filter
-    * can accept. The PPJoin prefix/length bounds must prune against THIS,
-    * not `⌈sz·t⌉`: a pair whose true ratio is a hair under t still rounds
-    * up to t once sz ≳ 2·10⁶ distinct shingles, and pruning with the
-    * unrounded bound would drop a pair the exact-recompute oracle keeps.
-    * Below that size the two bounds differ by at most 1 — the relaxation
-    * costs one extra prefix element. */
-  private def minInterExpr(threshold: Double): Column = {
-    val t7 = math.round(threshold * 1e7) - 5
-    expr(s"(sz * ${t7}L + 9999999L) div 10000000L")
-  }
-
+    * Candidates are then verified exactly on the full shingle sets. The
+    * sets are [[rankedSets]] with no df cap; the bound uses the rounding
+    * slack of [[minInterExpr]]. */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
                         n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    // persisted: the exploded frame feeds both the df aggregation and the
-    // join back, so the expensive shingle-building subtree evaluates ONCE.
-    // Shingle payload: distinct on STRINGS first (the semantic unit), then
-    // every downstream stage carries `xxhash64(shingle)` (8 bytes) instead
-    // of the ~25+-byte 3-gram string — the verify join shuffles two full
-    // `sh` arrays per candidate row, so token width is the spill
-    // multiplier (the [[containmentPairs]] measurement: ~4× payload cut).
-    // Correctness: the prefix filter is pigeonhole-based and exact under
-    // any token encoding; sizes/intersections differ from string-level
-    // truth only if two DISTINCT shingles in one comparison collide in 64
-    // bits (≤ sz²·2⁻⁶⁴ per pair), and xxhash64 is deterministic, so the
-    // string-side oracle either always or never agrees for a corpus.
-    val sh = CacheRegistry.persist(docs.select(col(id).as("doc_id"),
-      explode(array_distinct(shingles(col(text), n))).as("shingle"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("tok")))
-    // Document frequency via groupBy.count + join, NOT a value-keyed
-    // window: count().over(Window.partitionBy(shingle)) puts every row of
-    // a hot shingle on ONE task — a boilerplate 3-gram present in 10% of a
-    // 100 TB corpus lands billions of rows on one task before any filter
-    // runs. The aggregate partial-aggregates map-side (one row per shingle
-    // per map task crosses the wire) and the join back distributes a hot
-    // shingle's rows across however many tasks hold them.
-    val dfCounts = sh.groupBy("tok").agg(count(lit(1)).as("dfq"))
-    val ranked = sh.join(dfCounts, Seq("tok"))
-    // per doc: full set sorted by (df, token) — rarest first — and the
-    // prefix length from the bound above. Persisted: this subtree feeds the
-    // plan FOUR times (prefix sides a+b, full-set sides fa+fb) — without
-    // the persist the shingle df + aggregation runs 4× per query.
-    // Cache lifetime: registered with [[CacheRegistry]]; at corpus scale
-    // it spills to disk, which still beats recomputation.
-    val sets = CacheRegistry.persist(ranked
-      .groupBy("doc_id")
-      // groupagg-ok: one document's hashed shingle tokens — doc-sized
-      .agg(sort_array(collect_list(struct(col("dfq"), col("tok"))))
-        .as("ranked"))
-      .select(col("doc_id"),
-        transform(col("ranked"), r => r("tok")).as("sh"),
-        size(col("ranked")).as("sz"))
-      .withColumn("plen",
-        (col("sz") - minInterExpr(threshold) + 1).cast("int")))
-    val prefixes = sets.select(col("doc_id"),
-      explode(slice(col("sh"), lit(1), col("plen"))).as("tok"))
+    val (_, sets) = rankedSets(docs, id, text, n, threshold, maxPostings = None)
+    val prefixes = prefixTokens(sets)
     val cand = prefixes.as("a")
       .join(prefixes.as("b"),
         col("a.tok") === col("b.tok") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    cand
-      .join(sets.as("fa"), col("id_a") === col("fa.doc_id"))
-      .join(sets.as("fb"), col("id_b") === col("fb.doc_id"))
-      .withColumn("inter", size(array_intersect(col("fa.sh"), col("fb.sh"))))
-      .withColumn("n_a", col("fa.sz").cast("int"))
-      .withColumn("n_b", col("fb.sz").cast("int"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard")
+    verifyJaccard(cand, sets, threshold)
   }
 
   /** Asymmetric shingle CONTAINMENT pairs: all ordered (id_a, id_b) with
@@ -294,94 +328,47 @@ object Dedup {
     * union). Crawl curation uses it to drop the contained copy and keep
     * the superset document.
     *
-    * Scale shape — the asymmetric PPJoin variant of [[ngramJaccardPairs]]:
-    * the prefix filter applies to the CONTAINED side only (A must share at
-    * least one of its `sz−⌈t·sz⌉+1` rarest shingles with B), while the B
-    * side indexes its full shingle set — containment puts no lower bound
-    * on B's size, so B gets no prefix. Candidate cost is bounded by the
-    * document frequency of A's rarest shingles (prefixes are df-ranked,
-    * so hot boilerplate shingles stay out of the probe side), and the
-    * verify step is one array_intersect over the two cached sets. All
-    * shuffles are key-partitioned aggregates/joins; nothing is windowed
-    * by value.
+    * Scale shape — the asymmetric PPJoin variant of [[ngramJaccardPairs]]
+    * over the same [[rankedSets]]: the prefix filter applies to the
+    * CONTAINED side only (A must share at least one of its `sz−⌈t·sz⌉+1`
+    * rarest shingles with B), while the B side indexes its full shingle
+    * set — containment puts no lower bound on B's size, so B gets no
+    * prefix. Candidate cost is bounded by the document frequency of A's
+    * rarest shingles (prefixes are df-ranked, so hot boilerplate shingles
+    * stay out of the probe side), and the verify step is one
+    * array_intersect over the two cached sets. All shuffles are
+    * key-partitioned aggregates/joins; nothing is windowed by value.
     *
     * `maxPostings` hard-caps worst-case candidate volume (the mirror of
-    * [[lshCandidates]]' `maxBucket`): shingles appearing in more than
-    * `maxPostings` documents are boilerplate by definition and are
-    * excluded from the shingle UNIVERSE — prefixes, postings, and the
-    * verify intersect all operate on the capped sets, so both engines
-    * (and the oracle SQL) agree on the reduced semantics. This bounds
-    * every posting list at `maxPostings` rows, making candidate volume
-    * ≤ |prefix occurrences| × maxPostings instead of quadratic in the
-    * hottest shingle's df. Recall note: containment is then judged over
-    * non-boilerplate shingles only — a pair whose overlap is PURE
-    * boilerplate no longer qualifies (usually the desired behavior: a
-    * shared nav bar is not containment), and a document consisting
-    * entirely of capped shingles gets no judgment at all. The default
-    * (10000) never binds on the test corpora — semantics there are
-    * identical to the uncapped operator.
+    * [[lshCandidates]]' `maxBucket`, through the same [[dropOversized]]):
+    * shingles appearing in more than `maxPostings` documents are
+    * boilerplate by definition and are excluded from the shingle UNIVERSE
+    * — prefixes, postings, and the verify intersect all operate on the
+    * capped sets, so both engines (and the oracle SQL) agree on the
+    * reduced semantics. This bounds every posting list at `maxPostings`
+    * rows, making candidate volume ≤ |prefix occurrences| × maxPostings
+    * instead of quadratic in the hottest shingle's df. Recall note:
+    * containment is then judged over non-boilerplate shingles only — a
+    * pair whose overlap is PURE boilerplate no longer qualifies (usually
+    * the desired behavior: a shared nav bar is not containment), and a
+    * document consisting entirely of capped shingles gets no judgment at
+    * all. The default (10000) never binds on the test corpora — semantics
+    * there are identical to the uncapped operator.
     *
     * Residual cost honesty: on a twin-heavy corpus (k verbatim copies of
     * each doc) the TRUE output is itself Θ(k²) pairs — no candidate cap
     * can make that cheap, which is why the pipeline discipline is
     * exact-dedup (q27) BEFORE containment. The cap bounds the
-    * boilerplate-driven failure mode, not the duplicated-corpus one.
-    *
-    * Shingle payload: every stage downstream of the distinct-explode
-    * carries `xxhash64(shingle)` (8 bytes) rather than the 3-gram string
-    * (~25+ bytes) — the verify join's shuffle/spill payload, measured at
-    * 74 GB for the 100× one-box probe when it carried full string arrays
-    * (SCALE_PROBE.md), is dominated by the two `sh` arrays per candidate
-    * row, so the token width is the spill multiplier. Correctness: the
-    * prefix filter is pigeonhole-based (ANY `plen`-subset of A must hit
-    * B when |A∩B| ≥ minInter), so it is exact under any token encoding;
-    * set sizes and intersections differ from the string-level truth only
-    * if two DISTINCT shingles in one comparison collide in 64 bits —
-    * probability ≤ sz²·2⁻⁶⁴ per document pair (sz ≈ 10³ → ~5·10⁻¹⁴),
-    * and xxhash64 is deterministic, so the DuckDB oracle (which stays on
-    * strings) either always or never agrees for a given corpus. */
+    * boilerplate-driven failure mode, not the duplicated-corpus one. */
   def containmentPairs(docs: DataFrame, id: String, text: String,
                        n: Int = 3, threshold: Double = 0.5,
                        maxPostings: Int = defaultMaxPostings): DataFrame = {
-    // distinct on STRINGS first (the semantic unit), then hash: a 64-bit
-    // collision can shrink a set by 1 but never inflate it
-    val sh = CacheRegistry.persist(docs.select(col(id).as("doc_id"),
-      explode(array_distinct(shingles(col(text), n))).as("shingle"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("tok")))
-    val dfCounts = sh.groupBy("tok").agg(count(lit(1)).as("dfq"))
-    // df-cap in two steps, both keyed on the token:
-    //  1. broadcast ANTI-join against the capped-token list — the list is
-    //     boilerplate vocabulary (df > maxPostings), small by Zipf, while
-    //     the capped tokens' OCCURRENCES are the corpus's hottest rows: an
-    //     inner df-attach join would shuffle a sitewide shingle's billions
-    //     of occurrences onto the one task owning its key just to drop
-    //     them there. The anti-join drops them at the map side instead —
-    //     no capped row ever crosses the wire;
-    //  2. inner join to attach dfq to the SURVIVORS — per-key occupancy is
-    //     now ≤ maxPostings by construction, so the shuffle join's worst
-    //     task is bounded (no value-keyed window anywhere, as in
-    //     lshCandidates' bucket cap).
-    // bcast-ok: tokens with df > maxPostings — boilerplate vocabulary, Zipf-small
-    val ranked = CacheRegistry.persist(
-      sh.join(broadcast(dfCounts.filter(col("dfq") > maxPostings)
-          .select("tok")), Seq("tok"), "left_anti")
-        .join(dfCounts, Seq("tok")))
-    val sets = CacheRegistry.persist(ranked
-      .groupBy("doc_id")
-      // groupagg-ok: one document's hashed shingle tokens — doc-sized
-      .agg(sort_array(collect_list(struct(col("dfq"), col("tok"))))
-        .as("ranked"))
-      .select(col("doc_id"),
-        transform(col("ranked"), r => r("tok")).as("sh"),
-        size(col("ranked")).as("sz"))
-      .withColumn("plen",
-        (col("sz") - minInterExpr(threshold) + 1).cast("int")))
-    val prefixes = sets.select(col("doc_id"),
-      explode(slice(col("sh"), lit(1), col("plen"))).as("tok"))
-    // container-side postings: every CAPPED token of every doc — each
+    // container-side postings: every kept token of every doc — each
     // posting list is ≤ maxPostings rows by construction
-    val cand = prefixes.as("a")
-      .join(ranked.select("doc_id", "tok").as("b"),
+    val (postings, sets) =
+      rankedSets(docs, id, text, n, threshold, Some(maxPostings))
+    val cand = prefixTokens(sets).as("a")
+      .join(postings.as("b"),
         col("a.tok") === col("b.tok") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
@@ -394,9 +381,7 @@ object Dedup {
       // than that cannot qualify — implied by the final threshold filter
       // (with the same rounding slack), but it prunes candidates ahead of
       // the O(sz) intersect and pushes into the join
-      .filter(col("fb.sz").cast("long") >=
-        expr(s"(fa.sz * ${math.round(threshold * 1e7) - 5}L + 9999999L)" +
-          " div 10000000L"))
+      .filter(col("fb.sz").cast("long") >= minInterExpr(threshold, "fa.sz"))
       .withColumn("inter", size(array_intersect(col("fa.sh"), col("fb.sh"))))
       .withColumn("n_a", col("fa.sz").cast("int"))
       // integer half-up ratio, not round(double): cross-engine-exact
@@ -538,7 +523,8 @@ object Dedup {
     * store written by the original dedup pass (they are recomputed here —
     * per-document work that maps over the corpus once, no pairing).
     * Returns exactly the near-dup pairs involving at least one new
-    * document, in [[nearDupMinHash]]'s output schema. */
+    * document, in [[nearDupMinHash]]'s output schema, through the same
+    * bucket cap ([[dropOversized]]) and verify ([[verifyJaccard]]). */
   def incrementalNearDups(corpus: DataFrame, newDocs: DataFrame,
                           id: String, text: String,
                           n: Int = 3, k: Int = 64, bands: Int = 16,
@@ -549,12 +535,14 @@ object Dedup {
     // Probe-side pruning: only buckets the NEW batch occupies can produce
     // a pair (the pair join's left side is bNew), so the corpus index is
     // filtered to those buckets map-side BEFORE anything is sized, cached,
-    // or shuffled — the previous shape pushed the whole |corpus|×bands
-    // index (2²⁴ rows at the q253 gate) through the bucket-size aggregate,
-    // two semi joins, and a cache whose members overwhelmingly sit in
-    // never-probed buckets. The semi join keeps EVERY member of a probed
-    // bucket, so the maxBucket sizing below still sees full-index bucket
-    // sizes and the output is identical.
+    // or shuffled — otherwise the whole |corpus|×bands index (2²⁴ rows at
+    // the q253 gate) goes through the bucket-size aggregate and a cache
+    // whose members overwhelmingly sit in never-probed buckets. The semi
+    // join keeps EVERY member of a probed bucket, so the sizes below equal
+    // the full-index sizes for every bucket that can produce a pair: the
+    // cap sees a boilerplate bucket as hot whichever batch its members
+    // arrived in, and the output equals the batch pair set restricted to
+    // pairs with a new side.
     val probedKeys = bNew.select("band", "bh").distinct()
     val bAll = CacheRegistry.persist(
       bNew.unionByName(bandBuckets(
@@ -563,15 +551,9 @@ object Dedup {
         // two-long rows; |new| ≪ |corpus| is the operator's contract (a
         // corpus-sized batch belongs in nearDupMinHash's self-join instead)
         .join(broadcast(probedKeys), Seq("band", "bh"), "left_semi"))
-    // degenerate-bucket cap sized on the FULL index: a boilerplate bucket
-    // is hot regardless of which batch its members arrived in (the probe
-    // pruning above keeps all members of probed buckets, so these sizes
-    // equal the full-index sizes for every bucket that can produce a pair)
-    val small = bAll.groupBy("band", "bh").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= maxBucket)
-      .select("band", "bh")
-    val pairs = bNew.join(small, Seq("band", "bh"), "left_semi").as("l")
-      .join(bAll.join(small, Seq("band", "bh"), "left_semi").as("r"),
+    val sizes = keyCounts(bAll, "band", "bh")
+    val pairs = dropOversized(bNew, sizes, maxBucket).as("l")
+      .join(dropOversized(bAll, sizes, maxBucket).as("r"),
         col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
           col(s"l.$id") =!= col(s"r.$id"))
       // canonical (min, max) ordering: a new×new pair is seen from both
@@ -579,7 +561,8 @@ object Dedup {
       .select(least(col(s"l.$id"), col(s"r.$id")).as("id_a"),
         greatest(col(s"l.$id"), col(s"r.$id")).as("id_b"))
       .distinct()
-    verifyJaccard(pairs, corpus.unionByName(newDocs), id, text, n, threshold)
+    verifyJaccard(pairs, hashedSets(corpus.unionByName(newDocs), id, text, n),
+      threshold)
   }
 
   /** 64-bit SimHash over the token multiset: per-bit weighted votes
@@ -702,7 +685,7 @@ object Dedup {
       .filter(bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))) <= maxHamming)
       .select(col(s"l.$id").as("id_a"), col(s"r.$id").as("id_b"))
       .distinct()
-    verifyJaccard(pairs, docs, id, text, n, threshold)
+    verifyJaccard(pairs, hashedSets(docs, id, text, n), threshold)
   }
 
   /** Winnowing fingerprint selection + near-dup candidates (Schleimer /
@@ -802,21 +785,19 @@ object Dedup {
     * diagnosis, this is the pairwise detector). `Σ max = n_a + n_b −
     * Σ min`, so one min-sum join suffices.
     *
-    * Scale shape: identical to [[ngramJaccardPairs]] — a shingle-keyed
-    * inverted-index self-join (shingles are the sharp key unigrams are
-    * not), per-doc counts instead of a distinct-explode, sizes joined
+    * Scale shape: a shingle-keyed inverted-index self-join (shingles are
+    * the sharp key unigrams are not) over hashed per-doc bag counts, with
+    * no prefix filter (the set-based PPJoin bound of [[ngramJaccardPairs]]
+    * does not carry over to multiplicities as written), sizes joined
     * after the pair aggregation; the threshold and output ratio are one
     * integer-exact [[graft.ops.Relational.ratio6]] each. */
   def weightedNgramJaccardPairs(docs: DataFrame, id: String, text: String,
                                 n: Int = 3,
                                 threshold: Double = 0.8): DataFrame = {
-    // Shingle payload: every row of the inverted-index self-join carries
-    // the shingle key, so the ~25+-byte n-gram string is hashed to
-    // `xxhash64` (8 bytes) BEFORE the count aggregation — the bag
-    // semantics count occurrences of the string (hashing is injective on
-    // the corpus modulo 64-bit collisions, same analysis as
-    // [[ngramJaccardPairs]]: ≤ sz²·2⁻⁶⁴ per compared pair, deterministic,
-    // so the string-side oracle either always or never agrees per corpus).
+    // every row of the inverted-index self-join carries the shingle key,
+    // so the n-gram string is hashed BEFORE the count aggregation; the bag
+    // counts occurrences of the string up to 64-bit collisions (payload
+    // and collision argument: rankedSets)
     val sh = CacheRegistry.persist(
       docs.select(col(id), explode(shingles(col(text), n)).as("s"))
         .select(col(id), xxhash64(col("s")).as("s"))
@@ -911,13 +892,6 @@ object Dedup {
       FROM documents) t
     WHERE rn = 1"""
 
-  /** Shared oracle for every near-dup detector: exact 3-gram Jaccard pairs
-    * at threshold 0.8, computed in DuckDB with the same inverted-index
-    * shape. The detectors (q31 MinHash-LSH, q41 SimHash) must recover this
-    * exact pair set on the fixed corpus — recall misses fail the hash
-    * compare, which is the point. */
-  /** Shared CTE chain computing the exact 3-gram shingle pair overlaps —
-    * composed into both the pair-set oracle and q47's cluster oracle. */
   /** The distinct-3-gram-shingle CTEs alone (`toks`, `sh`) — the DuckDB
     * mirror of `array_distinct(shingles(text, 3))`, shared by the pair
     * oracles and q101's novelty oracle. */
@@ -937,6 +911,8 @@ object Dedup {
       SELECT doc_id, COALESCE(array_to_string(ts, ' '), '')
       FROM toks WHERE len(ts) < 3)"""
 
+  /** Shared CTE chain computing the exact 3-gram shingle pair overlaps —
+    * composed into both the pair-set oracle and q47's cluster oracle. */
   private[ext] val ngramPairCtes: String = s"""$ngramShingleCtes,
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
     pairs AS (
@@ -944,6 +920,11 @@ object Dedup {
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY 1, 2)"""
 
+  /** Shared oracle for every near-dup detector: exact 3-gram Jaccard pairs
+    * at threshold 0.8, computed in DuckDB with the same inverted-index
+    * shape. The detectors (q31 MinHash-LSH, q41 SimHash) must recover this
+    * exact pair set on the fixed corpus — recall misses fail the hash
+    * compare, which is the point. */
   val ngramJaccardOracleSql: String = s"""
     WITH $ngramPairCtes
     SELECT p.id_a, p.id_b,

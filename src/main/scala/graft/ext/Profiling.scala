@@ -1373,7 +1373,7 @@ object Profiling {
 
   // --- q172_skew_report: join-key skew advisory ---------------------------
   /** The pre-join skew check as a first-class operator — what this
-    * library's own audits do by hand (SKEW_AUDIT_*): for a prospective
+    * library's own skew audits did by hand: for a prospective
     * join/groupBy key, report cardinality, the heaviest key's share, the
     * Gini of the key-count distribution (q162's exact rank identity over
     * the counts-of-counts frame), and a RECOMMENDED SALT FACTOR

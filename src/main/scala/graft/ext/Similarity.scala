@@ -510,11 +510,12 @@ object Similarity {
     * Parameterized by the corpus CTE body (`veSql` must yield
     * `(vec_id, v DOUBLE[])`) so q74's planted-corpus replay reuses the
     * identical chain; the caller appends its own final SELECT over `af`
-    * (= the post-training assignment `(vec_id, cid, d2)`). */
-  /** @param pre CTE-name prefix so two chains can coexist in one WITH —
-    *             what [[q99PqSql]] needs to train one codebook per
-    *             subspace. Inner table aliases never leak, so only the
-    *             CTE names carry the prefix. */
+    * (= the post-training assignment `(vec_id, cid, d2)`).
+    *
+    * @param pre CTE-name prefix so two chains can coexist in one WITH —
+    *            what [[q99PqSql]] needs to train one codebook per
+    *            subspace. Inner table aliases never leak, so only the
+    *            CTE names carry the prefix. */
   private[ext] def kMeansCtes(veSql: String, k: Int, iters: Int,
                               pre: String = ""): String = {
     val prelude = s"""
@@ -608,6 +609,19 @@ object Similarity {
   }
 
   // --- q74_semantic_dedup: SemDeDup — k-means cells, then cosine prune ----
+  /** k at/above which [[semanticDedup]]'s `"auto"` routing swaps the flat
+    * broadcast argmin for [[kMeansIvf]]'s two-level N·√k assignment. Set
+    * from the round-15 crossover measurement:
+    * flat and IVF SemDeDup timed head-to-head end-to-end on the identical
+    * corpus and k = n/256 schedule — flat wins at k = 512 (8.9 vs 14.9 s),
+    * IVF from k = 1024 on (14.6 vs 12.2 s, then 27.7 vs 17.2 at 2048 and
+    * 86.1 vs 23.9 at 4096). The r14 extrapolation (~2²³ rows) was an
+    * order of magnitude conservative: the flat argmin's N·k term is
+    * already dominant at 2¹⁸ rows on 32 cores. Callers pin a path with
+    * `routing = "flat"` / `"ivf"` (the probes do, so the measured
+    * exponents stay path-pure). */
+  val semanticDedupIvfK: Int = 1024
+
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster the
     * embedding space with [[kMeans]], detect near-duplicate pairs only
     * WITHIN a cluster, and keep a document iff NO above-threshold neighbor
@@ -628,7 +642,7 @@ object Similarity {
     * sides on `cluster`, never forming |corpus|² candidates. Training cost
     * is [[kMeans]]'s: one corpus pass per Lloyd round against broadcast
     * centroids — and with k ∝ N that flat argmin is an honest N·k = N²/
-    * ⟨cell⟩ term (SCALE_PROBE.md's `semdedup_cells` row measured it). At
+    * ⟨cell⟩ term (the scale probe's `semdedup_cells` row measured it). At
     * the 100M-doc/100k-cell point use [[semanticDedupIvf]]: two-level
     * routing (coarse Lloyd at ⌈√k⌉ centroids, then per-cell fine Lloyd)
     * drops assignment AND training to N·√k while leaving the pair stage,
@@ -641,19 +655,6 @@ object Similarity {
     * needs no global order — each cell resolves independently, and the
     * anti-join side (`dropped`) partial-aggregates map-side via
     * `distinct`. */
-  /** k at/above which [[semanticDedup]]'s `"auto"` routing swaps the flat
-    * broadcast argmin for [[kMeansIvf]]'s two-level N·√k assignment. Set
-    * from the round-15 crossover measurement (SCALE_PROBE.md):
-    * flat and IVF SemDeDup timed head-to-head end-to-end on the identical
-    * corpus and k = n/256 schedule — flat wins at k = 512 (8.9 vs 14.9 s),
-    * IVF from k = 1024 on (14.6 vs 12.2 s, then 27.7 vs 17.2 at 2048 and
-    * 86.1 vs 23.9 at 4096). The r14 extrapolation (~2²³ rows) was an
-    * order of magnitude conservative: the flat argmin's N·k term is
-    * already dominant at 2¹⁸ rows on 32 cores. Callers pin a path with
-    * `routing = "flat"` / `"ivf"` (the probes do, so the measured
-    * exponents stay path-pure). */
-  val semanticDedupIvfK: Int = 1024
-
   def semanticDedup(corpus0: DataFrame, id: String, vec: String,
                     k: Int, iters: Int, threshold: Double,
                     routing: String = "auto"): DataFrame = {

@@ -102,32 +102,6 @@ object Algorithms {
       // min-label propagation is monotone (see maxValuePropagation)
       blockSize = 3, durableDir = durableDir).vertices
 
-  /** Connected components WITHOUT a vertex program: the alternating
-    * large-star/small-star algorithm (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — the formulation used
-    * for trillion-edge graphs, here as a complement to the Pregel
-    * [[connectedComponents]] so the engine carries both iterative
-    * paradigms. Each round is two agg+join passes over the EDGE set:
-    *
-    *   large-star: per node u with m = min(N(u) ∪ {u}), rewire every
-    *   BIGGER neighbor v > u to (v, m) — after it, all edges point
-    *   big → small;
-    *   small-star: per node u with m = min(N(u)), rewire the smaller
-    *   neighbors (and u itself) to m.
-    *
-    * Both steps preserve connectivity and strictly shrink the potential,
-    * converging in O(log n) rounds to one star per component rooted at
-    * its minimum id — the same min-label result the Pregel form and the
-    * q47 recursive-CTE oracle produce (pinned by a property spec).
-    *
-    * Scale shape vs Pregel CC: no vertex-state join, no vote aggregate —
-    * each half-round is one groupBy(min) on node id plus one equi-join
-    * back, everything edge-partitioned; a high-degree hub is ONE group in
-    * a partial-aggregated min, not a window. Convergence is detected by
-    * an (edge-count, hash-sum) checksum going stable — one tiny action
-    * per round, against Pregel's full-materialization halt vote. Lineage
-    * is cut with a lazy localCheckpoint every 3 rounds, as in [[Pregel]].
-    */
   /** AQE policy for the alternating-star loop session, keyed on edge
     * count — extracted so the gate is pinned by a spec, not just prose.
     *
@@ -157,6 +131,32 @@ object Algorithms {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m")
     else Seq("spark.sql.adaptive.enabled" -> "false")
 
+  /** Connected components WITHOUT a vertex program: the alternating
+    * large-star/small-star algorithm (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) — the formulation used
+    * for trillion-edge graphs, here as a complement to the Pregel
+    * [[connectedComponents]] so the engine carries both iterative
+    * paradigms. Each round is two agg+join passes over the EDGE set:
+    *
+    *   large-star: per node u with m = min(N(u) ∪ {u}), rewire every
+    *   BIGGER neighbor v > u to (v, m) — after it, all edges point
+    *   big → small;
+    *   small-star: per node u with m = min(N(u)), rewire the smaller
+    *   neighbors (and u itself) to m.
+    *
+    * Both steps preserve connectivity and strictly shrink the potential,
+    * converging in O(log n) rounds to one star per component rooted at
+    * its minimum id — the same min-label result the Pregel form and the
+    * q47 recursive-CTE oracle produce (pinned by a property spec).
+    *
+    * Scale shape vs Pregel CC: no vertex-state join, no vote aggregate —
+    * each half-round is one groupBy(min) on node id plus one equi-join
+    * back, everything edge-partitioned; a high-degree hub is ONE group in
+    * a partial-aggregated min, not a window. Convergence is detected by
+    * an (edge-count, hash-sum) checksum going stable — one tiny action
+    * per round, against Pregel's full-materialization halt vote. Lineage
+    * is cut with a lazy localCheckpoint every 3 rounds, as in [[Pregel]].
+    */
   def ccAlternating(vertices: DataFrame, edges: DataFrame,
                     maxRounds: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -1330,7 +1330,7 @@ object Algorithms {
   // --- q201_cc_atscale: the gated-AQE CC branch, oracle-checked -----------
   /** Correctness coverage for [[ccLoopConfs]]' nE ≥ 1M branch — the AQE
     * skew-join configuration the 10×-edge audit added for hub stragglers
-    * (`SKEW_AUDIT_r08.md`) — which no corpus-derived registry query can
+    * (104 s → 38 s at 6M edges) — which no corpus-derived registry query can
     * reach at gate scale (sf0.01's whole lineitem is ~60k rows). The graph
     * is synthesized from `spark.range`, so the query exercises the SAME
     * gated branch at every sf: 2²⁰ vertices, a 1023-spoke star on every

@@ -128,7 +128,8 @@ class DedupSpec extends GraftSuite {
   test("lsh bucket cap drops degenerate buckets") {
     val docs = (1L to 50L).map(i => (i, "same same same text here")).toDF("doc_id", "text")
     val withSig = Dedup.minHashSignatures(docs, "doc_id", "text", 3, 32)
-    val capped = Dedup.lshCandidates(withSig, "doc_id", col("sig"), 8, maxBucket = 10)
+    val capped = Dedup.lshCandidates(withSig, "doc_id", col("sig"), 8, maxBucket = 10,
+      sigLen = 32)
     assert(capped.count() == 0) // every bucket has 50 members > cap
   }
 
@@ -158,6 +159,22 @@ class DedupSpec extends GraftSuite {
     assert(incremental == batchRestricted)
     // and at least one cross (new×old) pair exists, or the test is vacuous
     assert(incremental.exists { case (a, b, _) => a % 5 == 1 ^ b % 5 == 1 })
+    // the same equality under a bucket cap that binds: the incremental
+    // index sizes probed buckets over new AND old members, so it drops
+    // exactly the buckets the batch self-join drops. On this corpus every
+    // pair survives in some bucket of ≤ 2 members (caps 2–16 drop nothing),
+    // so the cap that binds is 1; a cap sized on the new batch alone would
+    // see each new×old bucket as 1 member and keep those pairs
+    val maxBucket = 1
+    val incrementalCapped = pairSet(Dedup.incrementalNearDups(
+      docs.filter(!isNew), docs.filter(isNew), "doc_id", "text",
+      maxBucket = maxBucket))
+    val batchCapped = pairSet(Dedup.nearDupMinHash(docs, "doc_id", "text",
+        maxBucket = maxBucket)
+      .filter(pmod(col("id_a"), lit(5)) === 1 || pmod(col("id_b"), lit(5)) === 1))
+    assert(incrementalCapped == batchCapped)
+    assert((incremental -- incrementalCapped).nonEmpty,
+      s"maxBucket $maxBucket dropped no pair — the cap never bound")
   }
 
   test("ngramNovelty scores first-seen shingles by corpus id order") {

@@ -93,20 +93,35 @@ class GraftPropertiesSpec extends GraftSuite {
       if (toks.length >= 3) toks.sliding(3).map(_.mkString(" ")).toSet
       else Set(toks.mkString(" "))
     }
+    // MinHash-LSH shares the exact verify: whatever its banding admits must
+    // carry the brute-force inter / n_a / n_b / jaccard, so its rows are a
+    // subset of the brute-force set (LSH may miss pairs, never invent one)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "inter", "n_a", "n_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
+          r.getInt(4), r.getDouble(5))).toSet
+    var minHashRows = 0
     for (s <- 1L to 4L; t <- Seq(0.5, 0.8)) {
       val docs = sample(gen, s).zipWithIndex.map { case (txt, i) => (i.toLong, txt) }
       val got = Dedup.ngramJaccardPairs(
           docs.toDF("doc_id", "text"), "doc_id", "text", 3, t)
         .select("id_a", "id_b", "inter").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val expected = (for {
+      val full = (for {
         (a, ta) <- docs; (b, tb) <- docs if a < b
         sa = shingleSet(ta); sb = shingleSet(tb)
         inter = (sa & sb).size
-        if round6(inter.toDouble / (sa.size + sb.size - inter)) >= t
-      } yield (a, b, inter)).toSet
+        jaccard = round6(inter.toDouble / (sa.size + sb.size - inter))
+        if jaccard >= t
+      } yield (a, b, inter, sa.size, sb.size, jaccard)).toSet
+      val expected = full.map { case (a, b, inter, _, _, _) => (a, b, inter) }
       assert(got == expected, s"seed $s threshold $t")
+      val lsh = rows(Dedup.nearDupMinHash(
+        docs.toDF("doc_id", "text"), "doc_id", "text", threshold = t))
+      assert(lsh.subsetOf(full), s"seed $s threshold $t: ${lsh -- full}")
+      minHashRows += lsh.size
     }
+    assert(minHashRows > 0, "MinHash found no pair on any seed — vacuous")
   }
 
   test("property: containmentPairs equals brute force, capped and uncapped") {

@@ -8,7 +8,8 @@ import scala.util.Using
   * ([[BroadcastGuardSpec]], [[WindowGuardSpec]], [[CollectGuardSpec]],
   * [[CrossJoinGuardSpec]], [[GroupAggGuardSpec]]): walks `src/main`,
   * finds dangerous call sites, and checks each carries its
-  * `<tag>-ok: <reason>` annotation nearby.
+  * `<tag>-ok: <reason>` annotation nearby. [[DocCommentGuardSpec]] reuses
+  * the file walk to find orphaned Scaladoc blocks.
   *
   * Two correctness details live here so every guard gets them at once:
   *

@@ -244,7 +244,7 @@ class PregelSpec extends GraftSuite {
   }
 
   test("ccAlternating AQE gate: small graphs replanning-free, big graphs skew-split") {
-    // the calibration SKEW_AUDIT_r08.md measured: ungated AQE cost q112
+    // the calibration the round-8 skew audit measured: ungated AQE cost q112
     // +5.5s of per-round replanning on a ~50k-edge graph, while the
     // 6M-edge hub graph needs the split (104s → 38s). A retune that
     // flips either branch re-opens one of those regressions.

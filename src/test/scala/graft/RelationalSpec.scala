@@ -35,9 +35,18 @@ class RelationalSpec extends GraftSuite {
   }
 
   test("every registered query returns rows at sf0.001") {
+    // per-query wall time (build + count), printed slowest first: this walk
+    // dominates the suite's run time, so the log says where it goes
+    val seconds = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     try SparkEntry.queries.foreach { case (name, fn) =>
-      assert(fn(spark, sf).count() > 0, s"$name returned 0 rows")
+      val t0 = System.nanoTime()
+      try assert(fn(spark, sf).count() > 0, s"$name returned 0 rows")
+      finally seconds += name -> (System.nanoTime() - t0) / 1e9
     } finally {
+      println(f"registered-query walk: ${seconds.map(_._2).sum}%.1f s over " +
+        s"${seconds.size} queries, slowest first:")
+      seconds.sortBy(-_._2).foreach { case (name, s) =>
+        println(f"  $s%8.2f s  $name") }
       // operator-internal persists must not outlive the walk: a plan left
       // in the shared session's CacheManager would be silently substituted
       // into later suites' matching subplans (breaking PlanShapeSpec's
