@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types._
 
@@ -15,6 +18,22 @@ import org.apache.spark.sql.types._
   * type (r6: `events.ts` INT64-nanos → TIMESTAMP_MICROS), which surfaced as
   * 16 unrelated query-shaped stack traces. The sentinel turns the next such
   * drift into ONE clear error naming the table and column.
+  *
+  * Every load reads with a schema from [[schemaOf]], the one schema
+  * resolver. A bare `spark.read.parquet(path)` infers the schema by running
+  * a Spark job that reads a footer, before the query's own action; on the
+  * job API that job was part of every submission's fixed cost. The resolver
+  * infers once per path and keeps the schema while its key still matches:
+  *   - the path's data-file listing (name, length and modification time of
+  *     every file, `_`/`.` files excluded), so a table rewritten in place is
+  *     inferred again and the sentinel sees the new columns;
+  *   - the session's parquet-reader confs that are set
+  *     (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+  *     `spark.sql.caseSensitive`), so `nanosAsLong` and the other reader
+  *     switches that change the inferred types are honoured per session.
+  * It holds at most [[maxResolvedPaths]] paths and evicts the least
+  * recently used, so a long-lived driver stays bounded. A cached schema
+  * costs one driver-side listing of the path and no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -53,7 +72,64 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else sentinel(name, spark.read.parquet(s"$dir/$name.parquet"))
+    else sentinel(name, read(spark, s"$dir/$name.parquet"))
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** Paths the schema resolver keeps at most. */
+  private[graft] val maxResolvedPaths = 64
+
+  private final case class Resolved(files: Seq[(String, Long, Long)],
+                                    confs: Map[String, String],
+                                    schema: StructType)
+
+  // access-ordered, so the eldest entry is the least recently used
+  private val resolved =
+    new java.util.LinkedHashMap[String, Resolved](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Resolved]): Boolean =
+        size > maxResolvedPaths
+    }
+
+  private[graft] def resolvedPaths: Int = resolved.synchronized(resolved.size)
+
+  /** The parquet schema at `path` as `spark.read.parquet(path).schema`
+    * gives it, inferred only when the path's files or the session's
+    * parquet-reader confs changed since the last inference (see the object
+    * Scaladoc). A missing path is never cached: the inference raises
+    * Spark's usual error. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val files = dataFiles(spark, path)
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+    resolved.synchronized(Option(resolved.get(path)))
+      .filter(r => r.files == files && r.confs == confs)
+      .map(_.schema)
+      .getOrElse {
+        val schema = spark.read.parquet(path).schema
+        resolved.synchronized(resolved.put(path, Resolved(files, confs, schema)))
+        schema
+      }
+  }
+
+  private def dataFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+        .filterNot { c =>
+          val n = c.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .sortBy(_.getPath.getName).flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    try walk(fs.getFileStatus(root))
+    catch { case _: FileNotFoundException => Nil }
+  }
 
   /** `events.ts` has shipped in two physical vintages:
     *   - parquet TIMESTAMP(NANOS), which Spark's vectorized reader only
@@ -68,7 +144,7 @@ object Tables {
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    read(spark, s"$dir/events.parquet")
   }
 
   /** Normalize whatever physical type `ts` arrived as to a session-local

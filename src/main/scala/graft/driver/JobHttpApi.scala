@@ -3,6 +3,9 @@ package graft.driver
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** Thin REST skin over [[JobControl]], route-compatible with remap's
@@ -18,10 +21,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *
   * Built on the JDK's HttpServer — a control-plane endpoint serving
   * O(jobs)-sized JSON has no business pulling a web framework onto the
-  * driver classpath. The request "parser" extracts only the `app` field
-  * (the one field the reference's POST contract requires beyond scheduler
-  * knobs Spark owns); it is a facade for humans and scripts, not a general
-  * JSON endpoint.
+  * driver classpath. A POST body is read up to [[MaxBodyBytes]] (a larger
+  * one is answered 413) and must be one JSON object, parsed with the
+  * Jackson that Spark already ships; only its string `app` (the one field
+  * the reference's POST contract requires beyond scheduler knobs Spark
+  * owns) and integer `priority` are read. A rejected body submits nothing.
   */
 object JobHttpApi {
 
@@ -46,14 +50,22 @@ object JobHttpApi {
         case ("GET", "/api/v1.0/jobs") =>
           respond(ex, 200, jarr(c.listJobs.map(j => jobJson(c, j))))
         case ("POST", "/api/v1.0/jobs") =>
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          appField(body) match {
-            case Some(name) if graft.SparkEntry.queries.contains(name) =>
-              respond(ex, 201, jobJson(c, c.submit(name, priorityField(body))))
-            case Some(name) =>
-              respond(ex, 400, jobj("error" -> jstr(s"unknown app '$name'")))
+          val bytes = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+          if (bytes.length > MaxBodyBytes)
+            respond(ex, 413, jobj("error" ->
+              jstr(s"request body over $MaxBodyBytes bytes")))
+          else jsonObject(new String(bytes, UTF_8)) match {
             case None =>
-              respond(ex, 400, jobj("error" -> jstr("No app name specified")))
+              respond(ex, 400, jobj("error" ->
+                jstr("request body is not a JSON object")))
+            case Some(o) => app(o) match {
+              case Some(name) if graft.SparkEntry.queries.contains(name) =>
+                respond(ex, 201, jobJson(c, c.submit(name, priority(o))))
+              case Some(name) =>
+                respond(ex, 400, jobj("error" -> jstr(s"unknown app '$name'")))
+              case None =>
+                respond(ex, 400, jobj("error" -> jstr("No app name specified")))
+            }
           }
         case ("GET", JobPath(id)) =>
           c.get(id) match {
@@ -79,15 +91,29 @@ object JobHttpApi {
 
   private val JobPath = "/api/v1\\.0/jobs/([^/]+)".r
 
-  /** Extract `"app": "<value>"` from the request body. */
-  private[graft] def appField(body: String): Option[String] =
-    "\"app\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findFirstMatchIn(body).map(_.group(1).replace("\\\"", "\""))
+  /** Largest POST body read; a job request is a few dozen bytes. */
+  private[graft] val MaxBodyBytes = 64 * 1024
 
-  /** Extract the reference POST contract's `priority` (int); absent → 0. */
+  private val json = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** The body as a JSON object; None when it is not exactly one. */
+  private def jsonObject(body: String): Option[JsonNode] =
+    Try(json.readTree(body)).toOption.filter(n => n != null && n.isObject)
+
+  /** The body's string `app` field, if any. */
+  private[graft] def appField(body: String): Option[String] =
+    jsonObject(body).flatMap(app)
+
+  private def app(o: JsonNode): Option[String] =
+    Option(o.get("app")).filter(_.isTextual).map(_.asText)
+
+  /** The reference POST contract's `priority` (int); absent → 0. */
   private[graft] def priorityField(body: String): Int =
-    "\"priority\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(body).map(_.group(1).toInt).getOrElse(0)
+    jsonObject(body).map(priority).getOrElse(0)
+
+  private def priority(o: JsonNode): Int =
+    Option(o.get("priority")).filter(_.canConvertToInt).map(_.asInt).getOrElse(0)
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)

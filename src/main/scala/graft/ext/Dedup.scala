@@ -1506,14 +1506,17 @@ object Dedup {
     val sideCnt = when(col("id") >= w1End && col("id") < w3End, 4)
       .otherwise(0)
     val sideChr = when(pmod(col("id"), lit(2L)) === 0, lit("a")).otherwise(lit("b"))
-    val toks = (0 until 68).map { i =>
-      when(col("id") < w1End, concat(pfx, lit("c"), lit(i % 34)))
-        .when(lit(i) < commonCnt, concat(pfx, lit("c"), lit(i)))
-        .when(lit(i) < commonCnt + sideCnt,
-          concat(pfx, sideChr, (lit(i) - commonCnt).cast("string")))
-    }
-    spark.range(docs).select(col("id").as("doc_id"),
-      concat_ws(" ", toks: _*).as("text"))
+    // one lambda over the 68 token slots keeps the projection small enough
+    // for whole-stage codegen to compile; array_join skips null slots
+    val toks = transform(sequence(lit(0), lit(67)), i =>
+      when(col("id") < w1End, concat(col("pfx"), lit("c"), (i % 34).cast("string")))
+        .when(i < col("common"), concat(col("pfx"), lit("c"), i.cast("string")))
+        .when(i < col("common") + col("side"),
+          concat(col("pfx"), col("side_chr"), (i - col("common")).cast("string"))))
+    spark.range(docs)
+      .select(col("id"), pfx.as("pfx"), commonCnt.as("common"),
+        sideCnt.as("side"), sideChr.as("side_chr"))
+      .select(col("id").as("doc_id"), array_join(toks, " ").as("text"))
   }
 
   def q256WjaccardAtScale(spark: SparkSession, dir: String): DataFrame =

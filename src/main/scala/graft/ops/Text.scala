@@ -186,9 +186,12 @@ object Text {
   /** Checked-in fixtures exercising the file sources end-to-end; tiny and
     * hand-authored (mirroring the reference's `testdata/gutenberg/`,
     * `testdata/html/`, `testdata/csv/insurance_sample.csv` shapes), so the
-    * DuckDB oracle can independently read the same bytes. */
-  val fixturesDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR", "/root/repo/fixtures")
+    * DuckDB oracle can independently read the same bytes. The default is
+    * `fixtures` under the working directory (sbt forks tests and `run` in
+    * the project root), made absolute because the oracle SQL embeds it;
+    * `GRAFT_FIXTURES_DIR` overrides it. */
+  val fixturesDir: String = sys.env.getOrElse("GRAFT_FIXTURES_DIR",
+    java.nio.file.Paths.get("fixtures").toAbsolutePath.toString)
 
   private def basename(c: Column): Column = regexp_extract(c, "[^/]+$", 0)
 

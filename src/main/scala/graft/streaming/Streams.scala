@@ -60,7 +60,7 @@ object Streams {
     // `ts` is in — nanos-as-long or TIMESTAMP_MICROS) and convert inside the
     // stream, exactly like the batch path (Tables.normalizeEventTs branches
     // on the analyzed schema, so it works on a streaming frame too)
-    val raw = spark.read.parquet(s"$inputDir/events.parquet").schema
+    val raw = Tables.schemaOf(spark, s"$inputDir/events.parquet")
     val stream = Tables.normalizeEventTs(spark.readStream
       .schema(raw)
       .option("maxFilesPerTrigger", 1)

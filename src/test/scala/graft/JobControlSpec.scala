@@ -4,6 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.driver.{JobControl, JobHttpApi}
+import org.apache.spark.sql.graft.SparkJobs
 
 /** The submit/track/cancel facade and its REST skin — route parity with
   * remap's initiator API (reference http_interface.py). */
@@ -235,5 +236,56 @@ class JobControlSpec extends GraftSuite {
       spark.sparkContext.removeSparkListener(listener)
       c.shutdown()
     }
+  }
+
+  test("REST skin: oversized, empty, non-JSON and non-string-app bodies submit nothing") {
+    val c = new JobControl(spark, sf)
+    val server = JobHttpApi.start(c)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}/api/v1.0"
+    val http = HttpClient.newHttpClient()
+    def post(body: String) = http.send(
+      HttpRequest.newBuilder(URI.create(base + "/jobs"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    try {
+      val before = c.listJobs
+      // a valid request padded past the cap: the cap, not the content, rejects it
+      val big = post("""{"app":"q1_agg","pad":"""" +
+        "x" * JobHttpApi.MaxBodyBytes + "\"}")
+      assert(big.statusCode() == 413 && big.body().contains("\"error\""),
+        big.body())
+      Seq("", "app=q1_agg", """x "app":"q1_agg"""", """{"app":"q1_agg"""",
+          """{"app":["q1_agg"]}""", """{"app":1}""", """["q1_agg"]""")
+        .foreach { b =>
+          val r = post(b)
+          assert(r.statusCode() >= 400 && r.statusCode() < 500 &&
+            r.body().contains("\"error\""), s"$b -> ${r.statusCode()} ${r.body()}")
+        }
+      assert(c.listJobs == before)
+      // a request just under the cap still goes through
+      val ok = post("""{"app":"q1_agg","pad":"""" +
+        "x" * (JobHttpApi.MaxBodyBytes - 40) + "\"}")
+      assert(ok.statusCode() == 201, ok.body())
+      val id = "\"id\":\"([^\"]+)\"".r.findFirstMatchIn(ok.body()).get.group(1)
+      await(c, id, Set(JobControl.Succeeded, JobControl.Failed))
+    } finally { server.stop(0); c.shutdown() }
+  }
+
+  test("a submitted query starts no Spark job before its action's first job") {
+    // its first build resolves the tables' schemas; later submissions reuse them
+    SparkEntry.queries("q3_join_agg")(spark, sf)
+    val c = new JobControl(spark, sf)
+    try {
+      var id = ""
+      val started = SparkJobs.during(spark) {
+        id = c.submit("q3_join_agg").id
+        assert(await(c, id, Set(JobControl.Succeeded, JobControl.Failed))
+          == JobControl.Succeeded)
+      }.filter(_.group == id)
+      // every job of the submission belongs to the action's SQL execution;
+      // a schema inference ("parquet at Tables.scala") would run outside it
+      assert(started.nonEmpty)
+      assert(started.forall(_.executionId != null), started.mkString("\n"))
+    } finally c.shutdown()
   }
 }
