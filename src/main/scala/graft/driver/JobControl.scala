@@ -1,11 +1,11 @@
 package graft.driver
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, ThreadFactory}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerStageSubmitted,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.{Success => TaskSuccess, TaskFailedReason}
 
@@ -21,6 +21,18 @@ import org.apache.spark.{Success => TaskSuccess, TaskFailedReason}
   * real: `cancelJobGroup(id, interruptOnCancel=true)` stops every Spark
   * job the query spawned, including mid-stage tasks — the counterpart of
   * the initiator revoking a planned job's task allocations.
+  *
+  * Progress and retries are observed, not driven: the scheduler already
+  * owns allocation and retry, so what remains of the initiator's task
+  * bookkeeping (`initiator.py:137-154`: `tasks → allocatedtasks →
+  * completedtasks` movement and its "N tasks left, N committed, N
+  * complete, N failed" line) is this class's one `SparkListener`. It
+  * keeps per-job counters ([[progressOf]]), attributed by the job group,
+  * and session-wide totals over every Spark job on the context
+  * ([[sessionProgress]]). Its callbacks run on the listener-bus thread,
+  * so each one is O(1) counter bumps and map operations and never
+  * blocks: a slow listener stalls every other consumer of the bus, and
+  * Spark drops events once the bus backs up.
   *
   * Scale note: this is driver-side control plane only — O(submitted jobs)
   * heap, zero involvement in the data path. The run action materializes
@@ -46,9 +58,8 @@ final class JobControl(spark: SparkSession, sfDir: String,
   // `daemons/initiator/monitor.py:32-45` reads the initiator's
   // tasks/allocatedtasks/completedtasks dicts). Under Spark the submit
   // thread runs every Spark job inside the job-group named by our id, so
-  // a listener can attribute stage/task events back to the tracked job
+  // the listener attributes stage/task events back to the tracked job
   // via the `spark.jobGroup.id` property on SparkListenerJobStart.
-  // Listener-bus discipline: O(1) counter bumps only, never blocking.
   // Retention: `jobs` and `progressById` are the driver-side job HISTORY,
   // one small record per submitted job, capped at `maxJobHistory`: when a
   // submit pushes the history past the cap, the OLDEST TERMINAL jobs are
@@ -57,79 +68,96 @@ final class JobControl(spark: SparkSession, sfDir: String,
   // bounded. Queued/Running jobs are never evicted — the cap applies to
   // history, not to live work.
   private val progressById = new ConcurrentHashMap[String, MutableProgress]()
-  private val stageOwner = new ConcurrentHashMap[Int, String]()
-  // per-stage set of completed task INDICES: a logical task counts toward
+  // one entry per stage of a tracked job: its owner's progress and the
+  // set of completed task INDICES. A logical task counts toward
   // tasksCompleted exactly once no matter which stage ATTEMPT or
   // speculative copy finishes it — counting only attempt 0 undercounted
   // after a fetch-failure retry (the successes land in attempt 1+ and the
-  // progress fraction could never reach 100). Swept with stageOwner.
-  private val stageTaskDone =
-    new ConcurrentHashMap[Int, java.util.Set[Int]]()
-  // sparkJobId → its stage ids, so onJobEnd can sweep stageOwner entries
-  // for stages that never fire completion events (SKIPPED stages reusing
-  // cached/shuffle output, or stages abandoned by a job abort) — without
-  // the sweep stageOwner grows without bound on a long-lived driver
+  // progress fraction could never reach 100). Keyed by stageId: attempts
+  // share the entry, so it is dropped only on a successful completion.
+  private val stages = new ConcurrentHashMap[Int, StageEntry]()
+  // sparkJobId → its stage ids, so onJobEnd can sweep `stages` entries for
+  // stages that never complete successfully (SKIPPED stages reusing
+  // cached/shuffle output, failed attempts, or stages abandoned by a job
+  // abort) — without the sweep `stages` grows without bound on a
+  // long-lived driver
   private val jobStages = new ConcurrentHashMap[Int, Seq[Int]]()
-  private val listener = new SparkListener {
+
+  // --- session totals over every Spark job on the context, tracked or not
+  private val jobsSubmitted = new AtomicLong
+  private val jobsSucceeded = new AtomicLong
+  private val jobsFailed = new AtomicLong
+  private val tasksCompleted = new AtomicLong
+  private val taskFailures = new AtomicLong
+  // live (stageId, attempt) pairs. Keyed by ATTEMPT too: after a
+  // fetch-failure resubmit, the failed attempt's StageCompleted event
+  // arrives while the new attempt is live — a stageId-only key would let
+  // it delete the live attempt
+  private val activeStages = ConcurrentHashMap.newKeySet[(Int, Int)]()
+
+  private[graft] val listener: SparkListener = new SparkListener {
     override def onJobStart(ev: SparkListenerJobStart): Unit = {
+      jobsSubmitted.incrementAndGet()
       val gid = Option(ev.properties)
         .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
       if (gid != null && jobs.containsKey(gid)) {
         val p = progressById.computeIfAbsent(gid, _ => new MutableProgress)
         p.sparkJobs.incrementAndGet()
-        ev.stageInfos.foreach(si => stageOwner.put(si.stageId, gid))
+        // a stage another live job already tracks keeps its entry, so its
+        // completed indices are not counted twice
+        ev.stageInfos.foreach(si =>
+          stages.computeIfAbsent(si.stageId, _ => new StageEntry(p)))
         jobStages.put(ev.jobId, ev.stageInfos.map(_.stageId))
       }
     }
-    override def onJobEnd(ev: org.apache.spark.scheduler.SparkListenerJobEnd)
-        : Unit = {
-      val stages = jobStages.remove(ev.jobId)
-      if (stages != null) stages.foreach { sid =>
-        stageOwner.remove(sid); stageTaskDone.remove(sid)
-      }
+    override def onJobEnd(ev: SparkListenerJobEnd): Unit = {
+      if (ev.jobResult == JobSucceeded) jobsSucceeded.incrementAndGet()
+      else jobsFailed.incrementAndGet()
+      val ids = jobStages.remove(ev.jobId)
+      if (ids != null) ids.foreach(stages.remove)
     }
     override def onStageSubmitted(ev: SparkListenerStageSubmitted): Unit = {
-      val p = owner(ev.stageInfo.stageId)
-      if (p != null) {
-        p.stagesSubmitted.incrementAndGet()
+      val si = ev.stageInfo
+      activeStages.add((si.stageId, si.attemptNumber()))
+      val s = stages.get(si.stageId)
+      if (s != null) {
+        s.progress.stagesSubmitted.incrementAndGet()
         // first attempt only: a fetch-failure resubmit re-runs tasks the
         // total already counts
-        if (ev.stageInfo.attemptNumber() == 0)
-          p.tasksTotal.addAndGet(ev.stageInfo.numTasks)
+        if (si.attemptNumber() == 0)
+          s.progress.tasksTotal.addAndGet(si.numTasks)
       }
     }
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-      val p = owner(ev.stageInfo.stageId)
-      if (p != null && ev.stageInfo.failureReason.isEmpty)
-        p.stagesCompleted.incrementAndGet()
-      // the owner map is keyed by stageId (attempts share it); drop the
-      // mapping only once no further attempt can arrive — failed attempts
-      // and never-completed (skipped/aborted) stages are swept at job end
-      if (ev.stageInfo.failureReason.isEmpty) {
-        stageOwner.remove(ev.stageInfo.stageId)
-        stageTaskDone.remove(ev.stageInfo.stageId)
+      val si = ev.stageInfo
+      activeStages.remove((si.stageId, si.attemptNumber()))
+      // a failed attempt keeps the entry for the next one; never-completed
+      // (skipped/aborted) stages are swept at job end
+      if (si.failureReason.isEmpty) {
+        val s = stages.remove(si.stageId)
+        if (s != null) s.progress.stagesCompleted.incrementAndGet()
       }
     }
     override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = {
-      val p = owner(ev.stageId)
-      if (p != null) ev.reason match {
+      val s = stages.get(ev.stageId)
+      ev.reason match {
         // count by task INDEX, once per stage: tasksTotal counts attempt-0
         // partitions, and indices are stable across attempts, so dedup on
         // the index keeps tasksCompleted ≤ tasksTotal (no >100% from
         // retry/speculative copies) while still crediting a task whose
         // only success lands in attempt 1+ (no permanent undercount)
         case TaskSuccess =>
-          val done = stageTaskDone.computeIfAbsent(ev.stageId,
-            _ => ConcurrentHashMap.newKeySet[Int]())
-          if (done.add(ev.taskInfo.index)) p.tasksCompleted.incrementAndGet()
+          tasksCompleted.incrementAndGet()
+          if (s != null && s.done.add(ev.taskInfo.index))
+            s.progress.tasksCompleted.incrementAndGet()
+        // only attempts the scheduler counts as failures are retries — a
+        // TaskKilled from speculation or job cancellation is normal
+        // operation and must not make a healthy run report failed attempts
         case r: TaskFailedReason if r.countTowardsTaskFailures =>
-          p.taskRetries.incrementAndGet()
+          taskFailures.incrementAndGet()
+          if (s != null) s.progress.taskRetries.incrementAndGet()
         case _ => ()
       }
-    }
-    private def owner(stageId: Int): MutableProgress = {
-      val gid = stageOwner.get(stageId)
-      if (gid == null) null else progressById.get(gid)
     }
   }
   spark.sparkContext.addSparkListener(listener)
@@ -138,6 +166,17 @@ final class JobControl(spark: SparkSession, sfDir: String,
     * Spark job enters the scheduler (a QUEUED job has no stages yet). */
   def progressOf(id: String): Progress = Option(progressById.get(id))
     .map(_.snapshot).getOrElse(Progress(0, 0, 0, 0, 0, 0))
+
+  /** Point-in-time totals over every Spark job the context ran since this
+    * control was created — the initiator's "N tasks left, N committed,
+    * N complete, N failed" line for the whole session. */
+  def sessionProgress: SessionProgress = SessionProgress(
+    jobsSubmitted.get, jobsSucceeded.get, jobsFailed.get,
+    tasksCompleted.get, taskFailures.get, activeStages.size)
+
+  /** Entries in the per-stage map: zero once every tracked Spark job has
+    * ended, whatever became of its stages. */
+  private[graft] def trackedStages: Int = stages.size
 
   /** The registered applications — remap's GET /apps listed the app
     * directories the initiator could start (`initiator.py` list_apps). */
@@ -294,4 +333,18 @@ object JobControl {
       stagesCompleted.get, tasksTotal.get, tasksCompleted.get,
       taskRetries.get)
   }
+
+  /** One stage of a tracked job: its owner's progress and the indices of
+    * its tasks that have succeeded, in any attempt. */
+  private[driver] final class StageEntry(val progress: MutableProgress) {
+    val done: java.util.Set[Int] = ConcurrentHashMap.newKeySet[Int]()
+  }
+
+  /** Session-wide totals over every Spark job on the context. A task
+    * failure is an attempt the scheduler counts toward its retry limit;
+    * `activeStages` counts stage attempts submitted and not yet
+    * completed. */
+  final case class SessionProgress(jobsSubmitted: Long, jobsSucceeded: Long,
+                                   jobsFailed: Long, tasksCompleted: Long,
+                                   taskFailures: Long, activeStages: Int)
 }

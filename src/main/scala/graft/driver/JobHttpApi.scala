@@ -18,6 +18,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   GET    /api/v1.0/jobs/<id>  → one job, 404 unknown
   *   DELETE /api/v1.0/jobs/<id>  → cancel, 204 / 404
   *   GET    /api/v1.0/nodes      → executor inventory
+  *   GET    /api/v1.0/status     → session totals
+  *                                 ([[JobControl.sessionProgress]])
   *
   * Built on the JDK's HttpServer — a control-plane endpoint serving
   * O(jobs)-sized JSON has no business pulling a web framework onto the
@@ -80,6 +82,15 @@ object JobHttpApi {
             "address" -> jstr(n.address),
             "max_mem_bytes" -> n.maxMemBytes.toString,
             "remaining_mem_bytes" -> n.remainingMemBytes.toString))))
+        case ("GET", "/api/v1.0/status") =>
+          val s = c.sessionProgress
+          respond(ex, 200, jobj(
+            "jobs_submitted" -> s.jobsSubmitted.toString,
+            "jobs_succeeded" -> s.jobsSucceeded.toString,
+            "jobs_failed" -> s.jobsFailed.toString,
+            "tasks_completed" -> s.tasksCompleted.toString,
+            "task_failures" -> s.taskFailures.toString,
+            "active_stages" -> s.activeStages.toString))
         case _ =>
           respond(ex, 404, jobj("error" -> jstr("no such route")))
       }

@@ -485,8 +485,8 @@ object Windows {
   /** Diurnal profile per group: total volume, the peak hour (ties to the
     * smallest hour), the peak's count and its share — the load-shape
     * summary capacity planning and anomaly baselines start from. Peak
-    * selection follows the canonicalPick discipline: a max aggregate plus
-    * a min-over-achievers semi-join, never a 24-row-per-group window
+    * selection is a max aggregate plus a min-over-achievers semi-join,
+    * never a 24-row-per-group window
     * sort (harmless at 24 rows, but the pattern must stay consistent so
     * PlanShapeSpec's no-value-keyed-window claim survives composition).
     *

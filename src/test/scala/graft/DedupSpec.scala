@@ -264,6 +264,31 @@ class DedupSpec extends GraftSuite {
       4L -> ((4L, 1L, 7L, 0L))))
   }
 
+  private def picks(clusters: Seq[(Long, Long)],
+                    sizes: Seq[(Long, Option[Long])]): Map[Long, (Long, Long, Long, Long)] =
+    Dedup.canonicalPick(clusters.toDF("doc_id", "cluster"),
+        sizes.toDF("doc_id", "n_chars"), "doc_id", "n_chars")
+      .collect()
+      .map(r => r.getAs[Long]("cluster") ->
+        ((r.getAs[Long]("keep_id"), r.getAs[Long]("n_members"),
+          r.getAs[Long]("keep_chars"), r.getAs[Long]("chars_dropped"))))
+      .toMap
+
+  test("canonicalPick: a null-size member never wins but still counts") {
+    // cluster 1: doc 1 (the smallest id) has no size; doc 3 outgrows doc 2
+    val got = picks(Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L)),
+      Seq((1L, None), (2L, Some(15L)), (3L, Some(20L)), (4L, Some(9L))))
+    assert(got == Map(
+      1L -> ((3L, 3L, 20L, 15L)),
+      4L -> ((4L, 1L, 9L, 0L))), got.toString)
+  }
+
+  test("canonicalPick: a cluster whose sizes are all null has no keeper") {
+    val got = picks(Seq((1L, 1L), (2L, 1L), (3L, 3L)),
+      Seq((1L, None), (2L, None), (3L, Some(5L))))
+    assert(got == Map(3L -> ((3L, 1L, 5L, 0L))), got.toString)
+  }
+
   test("dedupYield attributes global keep decisions back to each source") {
     // cluster 1 spans sources: keep doc 2 (longest) in sA; doc 1 (sA) and
     // doc 3 (sB) drop. Singleton 4 (sB) keeps itself.

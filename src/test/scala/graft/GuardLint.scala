@@ -9,7 +9,9 @@ import scala.util.Using
   * [[CrossJoinGuardSpec]], [[GroupAggGuardSpec]]): walks `src/main`,
   * finds dangerous call sites, and checks each carries its
   * `<tag>-ok: <reason>` annotation nearby. [[DocCommentGuardSpec]] reuses
-  * the file walk to find orphaned Scaladoc blocks.
+  * the file walk to find orphaned Scaladoc blocks, and
+  * [[ListenerGuardSpec]] reads each file's code with its comments
+  * stripped ([[code]]) to count the `SparkListener`s in `src/main`.
   *
   * Two correctness details live here so every guard gets them at once:
   *
@@ -68,4 +70,41 @@ object GuardLint {
     scalaFiles().map { p =>
       Files.readAllLines(p).asScala.count(_.contains(tag))
     }.sum
+
+  /** `src` with every comment blanked out: line comments, and block
+    * comments including nested ones (Scala's rule). String and character
+    * literals are kept whole, so a comment opener inside one is not
+    * taken for a comment; a blanked comment keeps its newlines. */
+  def code(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    def copyTo(end: Int): Unit = { out ++= src.substring(i, end); i = end }
+    while (i < src.length) {
+      if (at("//")) {
+        while (i < src.length && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 1
+        i += 2
+        while (depth > 0 && i < src.length) {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out += '\n'; i += 1 }
+        }
+      } else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        copyTo(if (end < 0) src.length else end + 3)
+      } else if (at("\"")) {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        copyTo(math.min(j + 1, src.length))
+      } else if (at("'\\") || (i + 2 < src.length && src(i) == '\'' &&
+          src(i + 2) == '\'')) {
+        val end = src.indexOf('\'', if (src(i + 1) == '\\') i + 3 else i + 2)
+        copyTo(if (end < 0) src.length else end + 1)
+      } else copyTo(i + 1)
+    }
+    out.toString
+  }
 }

@@ -2,8 +2,15 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.Properties
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.driver.{JobControl, JobHttpApi}
+import org.apache.spark.{Success, TaskEndReason, TaskKilled, TaskResultLost}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd, StageInfo, TaskInfo,
+  TaskLocality}
 import org.apache.spark.sql.graft.SparkJobs
 
 /** The submit/track/cancel facade and its REST skin — route parity with
@@ -286,6 +293,138 @@ class JobControlSpec extends GraftSuite {
       // a schema inference ("parquet at Tables.scala") would run outside it
       assert(started.nonEmpty)
       assert(started.forall(_.executionId != null), started.mkString("\n"))
+    } finally c.shutdown()
+  }
+
+  test("session totals count every Spark job on the context and serve as GET /status") {
+    val c = new JobControl(spark, sf)
+    val server = JobHttpApi.start(c)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}/api/v1.0"
+    try {
+      // an untracked run: no job group, still in the session totals
+      SparkEntry.queries("q1_agg")(spark, sf).collect()
+      SparkJobs.drain(spark)
+      val ok = c.sessionProgress
+      assert(ok.jobsSubmitted >= 1 && ok.jobsSucceeded >= 1, ok.toString)
+      assert(ok.jobsFailed == 0 && ok.tasksCompleted >= 1, ok.toString)
+      assert(ok.activeStages == 0, ok.toString)
+
+      import spark.implicits._
+      intercept[Exception] {
+        spark.range(10).as[Long]
+          .map(i => if (i >= 0) throw new RuntimeException("boom") else i)
+          .collect()
+      }
+      // the aborted job's other tasks may still end after its job-end
+      // event: wait until the totals stop moving
+      var s = c.sessionProgress
+      var settled = false
+      val t0 = System.currentTimeMillis()
+      while (!settled && System.currentTimeMillis() - t0 < 30000) {
+        Thread.sleep(200)
+        SparkJobs.drain(spark)
+        val t = c.sessionProgress
+        settled = t == s
+        s = t
+      }
+      assert(s.jobsFailed >= 1 && s.taskFailures >= 1, s.toString)
+
+      val r = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(base + "/status")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      val doc = new ObjectMapper().readTree(r.body())
+      val got = Seq("jobs_submitted", "jobs_succeeded", "jobs_failed",
+        "tasks_completed", "task_failures", "active_stages")
+        .map(k => doc.get(k).asLong)
+      assert(got == Seq(s.jobsSubmitted, s.jobsSucceeded, s.jobsFailed,
+        s.tasksCompleted, s.taskFailures, s.activeStages.toLong), r.body())
+    } finally { server.stop(0); c.shutdown() }
+  }
+
+  // synthetic scheduler events, posted straight to the listener; ids far
+  // above anything the shared test context reaches
+  private def stageInfo(id: Int, attempt: Int, tasks: Int): StageInfo =
+    new StageInfo(id, attempt, s"synthetic-$id", tasks, Seq.empty, Seq.empty,
+      "", null, Seq.empty, None, 0, false, 0)
+  private def taskEnd(stage: Int, attempt: Int, index: Int, taskAttempt: Int,
+                      reason: TaskEndReason): SparkListenerTaskEnd =
+    SparkListenerTaskEnd(stage, attempt, "ResultTask", reason,
+      new TaskInfo(index.toLong, index, taskAttempt, index, 0L, "driver",
+        "localhost", TaskLocality.PROCESS_LOCAL, false), null, null)
+
+  /** A tracked job that already ran for real, with the bus drained. */
+  private def trackedJob(c: JobControl): String = {
+    val id = c.submit("q1_agg").id
+    assert(await(c, id, Set(JobControl.Succeeded, JobControl.Failed))
+      == JobControl.Succeeded)
+    SparkJobs.drain(spark)
+    id
+  }
+
+  test("a failed task attempt is one retry, and its index counts once when a retry succeeds") {
+    val c = new JobControl(spark, sf)
+    try {
+      val id = trackedJob(c)
+      val p0 = c.progressOf(id)
+      val s0 = c.sessionProgress
+      assert(p0.taskRetries == 0 && p0.pct == 100, p0.toString)
+      val props = new Properties
+      props.setProperty("spark.jobGroup.id", id)
+      val (job, st) = (1 << 30, 1 << 30)
+      val l = c.listener
+      l.onJobStart(SparkListenerJobStart(job, 0L, Seq(stageInfo(st, 0, 2)), props))
+      l.onStageSubmitted(SparkListenerStageSubmitted(stageInfo(st, 0, 2)))
+      l.onTaskEnd(taskEnd(st, 0, 0, 0, TaskResultLost))
+      // a killed speculative copy is not a failure
+      l.onTaskEnd(taskEnd(st, 0, 0, 1, TaskKilled("another attempt succeeded")))
+      l.onTaskEnd(taskEnd(st, 0, 0, 2, Success))
+      l.onTaskEnd(taskEnd(st, 0, 1, 0, Success))
+      l.onStageCompleted(SparkListenerStageCompleted(stageInfo(st, 0, 2)))
+      l.onJobEnd(SparkListenerJobEnd(job, 0L, JobSucceeded))
+
+      val p = c.progressOf(id)
+      assert(p == JobControl.Progress(p0.sparkJobs + 1,
+        p0.stagesSubmitted + 1, p0.stagesCompleted + 1, p0.tasksTotal + 2,
+        p0.tasksCompleted + 2, 1), p.toString)
+      assert(p.tasksCompleted == p.tasksTotal && p.pct == 100, p.toString)
+      assert(c.sessionProgress == s0.copy(
+        jobsSubmitted = s0.jobsSubmitted + 1,
+        jobsSucceeded = s0.jobsSucceeded + 1,
+        tasksCompleted = s0.tasksCompleted + 2,
+        taskFailures = s0.taskFailures + 1), c.sessionProgress.toString)
+      assert(c.trackedStages == 0)
+    } finally c.shutdown()
+  }
+
+  test("the per-stage map is empty after a job ends: completed, skipped and aborted stages") {
+    val c = new JobControl(spark, sf)
+    try {
+      val id = trackedJob(c)
+      assert(c.trackedStages == 0, "a real run leaves no stage entries")
+      val s0 = c.sessionProgress
+      val props = new Properties
+      props.setProperty("spark.jobGroup.id", id)
+      val job = 1 << 30
+      val (done, skipped, aborted) = ((1 << 30) + 1, (1 << 30) + 2, (1 << 30) + 3)
+      val l = c.listener
+      l.onJobStart(SparkListenerJobStart(job, 0L,
+        Seq(done, skipped, aborted).map(stageInfo(_, 0, 1)), props))
+      assert(c.trackedStages == 3)
+      l.onStageSubmitted(SparkListenerStageSubmitted(stageInfo(done, 0, 1)))
+      l.onTaskEnd(taskEnd(done, 0, 0, 0, Success))
+      l.onStageCompleted(SparkListenerStageCompleted(stageInfo(done, 0, 1)))
+      // `skipped` is never submitted; `aborted` ends with a failure reason
+      l.onStageSubmitted(SparkListenerStageSubmitted(stageInfo(aborted, 0, 1)))
+      val failed = stageInfo(aborted, 0, 1)
+      failed.failureReason = Some("aborted")
+      l.onStageCompleted(SparkListenerStageCompleted(failed))
+      assert(c.trackedStages == 2)
+      assert(c.sessionProgress.activeStages == s0.activeStages)
+      l.onJobEnd(SparkListenerJobEnd(job, 0L,
+        SparkJobs.jobFailed(new RuntimeException("aborted"))))
+      assert(c.trackedStages == 0)
+      assert(c.sessionProgress.jobsFailed == s0.jobsFailed + 1)
     } finally c.shutdown()
   }
 }

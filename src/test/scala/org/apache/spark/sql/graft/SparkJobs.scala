@@ -4,12 +4,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{JobFailed, JobResult, SparkListener,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Records the Spark jobs that start while `body` runs. Lives under
   * `org.apache.spark` because draining the listener bus, so that every
-  * job-start event has been seen, is `private[spark]`. */
+  * job-start event has been seen, is `private[spark]`, and so is the
+  * failed-job result a synthetic job-end event carries. */
 object SparkJobs {
 
   /** One started job: its job group, the SQL execution it belongs to
@@ -17,10 +19,17 @@ object SparkJobs {
   final case class Started(jobId: Int, group: String, executionId: String,
                            callSite: String)
 
+  /** Blocks until every event posted so far has reached every listener. */
+  def drain(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The result a job-end event carries for a failed job. */
+  def jobFailed(e: Exception): JobResult = JobFailed(e)
+
   /** Every job started, on any thread, while `body` runs, in start order. */
   def during(spark: SparkSession)(body: => Unit): Seq[Started] = {
     val sc = spark.sparkContext
-    sc.listenerBus.waitUntilEmpty()
+    drain(spark)
     val seen = new ConcurrentLinkedQueue[Started]()
     val listener = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit = {
@@ -33,7 +42,7 @@ object SparkJobs {
     sc.addSparkListener(listener)
     try {
       body
-      sc.listenerBus.waitUntilEmpty()
+      drain(spark)
     } finally sc.removeSparkListener(listener)
     seen.asScala.toSeq.sortBy(_.jobId)
   }
