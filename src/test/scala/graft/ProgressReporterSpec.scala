@@ -1,46 +1,43 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import graft.driver.JobControl
+import org.apache.spark.sql.graft.SparkJobs
 
-import graft.driver.ProgressReporter
-import graft.driver.ProgressReporter._
-
+/** The session progress report: the totals JobControl's listener keeps
+  * over every Spark job on the context, tracked job group or not. */
 class ProgressReporterSpec extends GraftSuite {
 
-  /** Listener events are delivered async on the bus thread — poll until
-    * the condition holds instead of racing it. */
-  private def eventually(timeoutMs: Long = 10000)(cond: => Boolean): Unit = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (!cond && System.currentTimeMillis < deadline) Thread.sleep(50)
-    assert(cond, "condition not met within timeout")
+  /** The aborted job's other tasks may still end after its job-end event,
+    * so drain the bus and wait until the totals stop moving. */
+  private def settled(c: JobControl): JobControl.SessionProgress = {
+    var s = c.sessionProgress
+    var done = false
+    val t0 = System.currentTimeMillis()
+    while (!done && System.currentTimeMillis() - t0 < 30000) {
+      Thread.sleep(200)
+      SparkJobs.drain(spark)
+      val t = c.sessionProgress
+      done = t == s
+      s = t
+    }
+    s
   }
 
   test("progress events observed for a run of q1 (jobs, stages, completion)") {
-    val events = new ConcurrentLinkedQueue[Event]()
-    val r = ProgressReporter.attach(spark, events.add(_))
+    val c = new JobControl(spark, sf)
     try {
+      // an untracked run: no job group, still in the session totals
       SparkEntry.queries("q1_agg")(spark, sf).collect()
-      eventually() {
-        val evs = events.toArray(Array.empty[Event])
-        evs.exists(_.isInstanceOf[JobStarted]) &&
-          evs.collect { case JobEnded(_, ok) => ok }.contains(true) &&
-          evs.exists { case StageProgress(_, done, total) =>
-            total > 0 && done == total
-          case _ => false }
-      }
-      eventually() {
-        val s = r.snapshot
-        s.jobsSubmitted >= 1 && s.jobsSucceeded >= 1 &&
-          s.jobsFailed == 0 && s.tasksCompleted >= 1
-      }
-      // the human-readable status line the reference logged per completion
-      assert(r.snapshot.toString.contains("submitted"))
-    } finally spark.sparkContext.removeSparkListener(r)
+      val s = settled(c)
+      assert(s.jobsSubmitted >= 1 && s.jobsSucceeded >= 1, s.toString)
+      assert(s.jobsFailed == 0 && s.tasksCompleted >= 1, s.toString)
+      // every stage it submitted completed
+      assert(s.activeStages == 0, s.toString)
+    } finally c.shutdown()
   }
 
   test("a failing job reports the failed attempt and the failed job") {
-    val events = new ConcurrentLinkedQueue[Event]()
-    val r = ProgressReporter.attach(spark, events.add(_))
+    val c = new JobControl(spark, sf)
     try {
       import spark.implicits._
       intercept[Exception] {
@@ -48,11 +45,9 @@ class ProgressReporterSpec extends GraftSuite {
           .map(i => if (i >= 0) throw new RuntimeException("boom") else i)
           .collect()
       }
-      eventually() {
-        r.snapshot.jobsFailed >= 1 && r.snapshot.taskFailures >= 1 &&
-          events.toArray(Array.empty[Event])
-            .exists(_.isInstanceOf[TaskRetried])
-      }
-    } finally spark.sparkContext.removeSparkListener(r)
+      val s = settled(c)
+      assert(s.jobsFailed >= 1 && s.taskFailures >= 1, s.toString)
+      assert(s.activeStages == 0, s.toString)
+    } finally c.shutdown()
   }
 }
