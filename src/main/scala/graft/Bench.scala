@@ -31,6 +31,11 @@ object Bench {
     // shapes, whose one-time cost would otherwise bill the first query of
     // that family to run (measured ~7s on q47's first run vs ~3.3s
     // steady-state — most of its recorded spread was this compile).
+    // Graph loops plan in one reused session per loop shape
+    // (GraftSessionBridge.withConfs), so the classes the warm-up loops
+    // compile stay in the codegen cache for the timed loops of the same
+    // shape; with a fresh session per run, every run compiled its loop's
+    // classes again and this warm-up primed only the JIT and the planner.
     try {
       import org.apache.spark.sql.functions._
       exec(ops.Relational.q1Agg(spark, sfDir))

@@ -70,13 +70,16 @@ object Dedup {
     *     to the aggregate form, pinned by DedupSpec), and keeps the whole
     *     computation map-side: no explode, no aggregate, NO shuffle.
     * The null filter reproduces the explode form's silent drop of
-    * null-text documents (no shingle rows → no group). */
+    * null-text documents (no shingle rows → no group). It tests `text`,
+    * not `sig`: the signature is null exactly when the text is, and the
+    * optimizer pushes a `sig IS NOT NULL` below the projection with the
+    * whole signature inlined into it, computing every signature twice. */
   def minHashSignatures(docs: DataFrame, id: String, text: String,
                         n: Int, k: Int): DataFrame =
-    docs.select(col(id),
+    docs.filter(col(text).isNotNull)
+      .select(col(id),
         graft.functions.TextExpressions.minHashSignature(col(text), n, k)
           .as("sig"))
-      .filter(col("sig").isNotNull)
 
   // ------------------------------------------- the set-similarity substrate
 

@@ -80,7 +80,17 @@ object Pregel {
     * concurrent loops cannot race a save/restore. `confs` are the loop's
     * AQE settings; the default turns AQE off, because the loop sizes its
     * shuffles explicitly and per-stage replanning is pure driver overhead
-    * at superstep cadence. */
+    * at superstep cadence.
+    *
+    * The clone is [[GraftSessionBridge.withConfs]]'s: one per (caller,
+    * caller's SQL conf, loop partitions, `confs`), reused across runs.
+    * A fresh clone per run was a new session UUID, hence a new
+    * executor-side classloader, and Spark's codegen cache is keyed on the
+    * classloader — so every run compiled all of its loop's
+    * whole-stage-codegen classes again (9 per 5-vertex
+    * `connectedComponents` run). A warm perfbench dedup-pipeline job
+    * compiled 118–120 classes this way and now compiles none; that also
+    * needs the cache size set in [[graft.LocalSession]]. */
   private[graft] def loopSession(
       spark: SparkSession, rows: Long,
       rowsPerPartition: Long = rowsPerLoopPartition,
@@ -89,9 +99,8 @@ object Pregel {
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts =
       math.min(sessionParts.toLong, rows / rowsPerPartition + 1).toInt
-    val s = GraftSessionBridge.cloneSession(spark)
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val s = GraftSessionBridge.withConfs(spark,
+      ("spark.sql.shuffle.partitions" -> loopParts.toString) +: confs)
     (s, loopParts)
   }
 
@@ -218,8 +227,11 @@ object Pregel {
       e.unpersist(false)
       c
     }
-    if (v.queryExecution.toRdd.getNumPartitions > 2 * loopParts)
-      v = v.coalesce(loopParts).localCheckpoint(true)
+    if (v.queryExecution.toRdd.getNumPartitions > 2 * loopParts) {
+      val c = v.coalesce(loopParts).localCheckpoint(true)
+      GraftSessionBridge.dropCheckpoint(v)
+      v = c
+    }
     v = inLoop(v)
     var step = startStep
     var allHalt = false
@@ -249,8 +261,8 @@ object Pregel {
       // One materialization per block: a LAZY local checkpoint, which the
       // durable write or the halt action below materializes in the same
       // Spark job — an eager checkpoint would run a second job per block
-      // for nothing. Superseded generations are left to the
-      // ContextCleaner (unpersist is a no-op on a checkpoint's plan).
+      // for nothing.
+      val prev = v
       v = cur.localCheckpoint(false)
       durableDir.foreach(writeDurable(v, _, step))
       // The halt vote is an AGGREGATE, not filter(...).isEmpty: isEmpty is
@@ -266,6 +278,11 @@ object Pregel {
           v.agg(coalesce(bool_and(col("halt")), lit(true)))
             .head().getBoolean(0)                       // action → barrier
         else { v.count(); false }                       // action → barrier
+      // v is whole and its lineage cut, so the generation it was computed
+      // from is dead: free its blocks now. Left to the ContextCleaner, a
+      // superseded generation stays on the executors until a driver GC
+      // happens to find it, which is after the run on a quiet heap.
+      GraftSessionBridge.dropCheckpoint(prev)
     }
 
     // v is already a checkpoint: hand it back on the CALLER's session

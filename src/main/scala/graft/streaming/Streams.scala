@@ -766,15 +766,15 @@ object Streams {
     * so it only ever SHRINKS toward the state size and never below 2 —
     * the cross-partition paths stay exercised). The at-scale gates start
     * their streaming queries on this clone; the caller's session and any
-    * concurrent queries are untouched. */
+    * concurrent queries are untouched. The clone is reused across runs of
+    * the same size (`GraftSessionBridge.withConfs`). */
   private def stateSizedSession(spark: SparkSession,
                                 expectedKeys: Long): SparkSession = {
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val parts = math.max(2L, math.min(sessionParts.toLong,
       expectedKeys / keysPerStatePartition + 1)).toInt
-    val s = org.apache.spark.sql.graft.GraftSessionBridge.cloneSession(spark)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    s
+    org.apache.spark.sql.graft.GraftSessionBridge.withConfs(spark,
+      Seq("spark.sql.shuffle.partitions" -> parts.toString))
   }
 
   /** Drain a FINISHED memory-sink streaming query eagerly: materialize

@@ -697,6 +697,20 @@ class DedupSpec extends GraftSuite {
     assert(!nw.contains(5L) && !o.contains(5L))
   }
 
+  test("minHashSignatures computes each signature once: the optimized " +
+      "plan holds one minhash_signature") {
+    import org.apache.spark.sql.graft.MinHashSignature
+    // a range, not a local Seq: the optimizer would fold a local
+    // relation's whole plan into one LocalRelation
+    val docs = spark.range(1, 3).select(col("id").as("doc_id"),
+      when(col("id") === 1L, lit("a b c d")).as("text"))
+    val sigs = Dedup.minHashSignatures(docs, "doc_id", "text", 3, 64)
+    val found = sigs.queryExecution.optimizedPlan.flatMap(_.expressions
+      .flatMap(_.collect { case m: MinHashSignature => m }))
+    assert(found.size == 1, sigs.queryExecution.optimizedPlan.toString)
+    assert(sigs.collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
   test("native simhash64 is bit-identical to the packed-lane aggregate form") {
     import org.apache.spark.sql.functions._
     val docs = spark.createDataFrame(Seq(

@@ -11,7 +11,9 @@ import scala.util.Using
   * `<tag>-ok: <reason>` annotation nearby. [[DocCommentGuardSpec]] reuses
   * the file walk to find orphaned Scaladoc blocks, and
   * [[ListenerGuardSpec]] reads each file's code with its comments
-  * stripped ([[code]]) to count the `SparkListener`s in `src/main`.
+  * stripped ([[code]]) to count the `SparkListener`s in `src/main`, as
+  * [[SessionCloneGuardSpec]] does to keep `cloneSession` calls inside
+  * `GraftSessionBridge`.
   *
   * Two correctness details live here so every guard gets them at once:
   *

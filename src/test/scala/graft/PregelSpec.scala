@@ -143,6 +143,81 @@ class PregelSpec extends GraftSuite {
     assert(got.values.toSet == Set(0L), s"labels: ${got.values.toSet}")
   }
 
+  test("a second identical connectedComponents run compiles no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val v = (0L until 5L).toDF("id")
+    val e = Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("src", "dst")
+    def components() = Algorithms.connectedComponents(v, e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val first = components()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = components()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(second == first)
+    assert(second == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L))
+    assert(compiled == 0, s"the warm run compiled $compiled classes")
+  }
+
+  test("a Pregel run leaves only its result's checkpoint persisted") {
+    // 30 one-superstep blocks make 30 checkpoint generations; each one is
+    // freed once the next is materialized, not at some later driver GC
+    val v = Seq((0L, 0L), (1L, 0L)).toDF("id", "value")
+    val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keys.toSet
+    val res = Pregel.run(v, e, maxIter = 30,
+      sendMsg = col("value") + 1, mergeMsg = max,
+      vprog = (df, _) => df.select(col("id"),
+        greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")))
+    val left = spark.sparkContext.getPersistentRDDs.keys.toSet -- before
+    assert(left.size <= 1, s"persisted RDDs left by the run: $left")
+    assert(res.vertices.select("value").as[Long].collect().forall(_ >= 29L))
+  }
+
+  test("loopSession: the same caller conf and overrides give the same " +
+      "session; a changed caller conf gives a new one that shows it") {
+    val caller = spark.newSession()
+    val (a, parts) = Pregel.loopSession(caller, 10L)
+    assert(Pregel.loopSession(caller, 10L)._1 eq a)
+    assert(a.conf.get("spark.sql.shuffle.partitions") == parts.toString)
+    assert(a.conf.get("spark.sql.adaptive.enabled") == "false")
+    val key = "spark.sql.session.timeZone"
+    val was = caller.conf.get(key)
+    caller.conf.set(key, "America/Denver")
+    val (b, _) = Pregel.loopSession(caller, 10L)
+    assert(!(b eq a))
+    assert(b.conf.get(key) == "America/Denver")
+    assert(a.conf.get(key) == was, "a handed-out session changed")
+    caller.conf.set(key, was)
+    assert(Pregel.loopSession(caller, 10L)._1 eq a)
+  }
+
+  test("loopSession's overrides never reach the caller's conf") {
+    val caller = spark.newSession()
+    val before = caller.conf.getAll
+    val (s, _) = Pregel.loopSession(caller, 10L,
+      confs = Algorithms.ccLoopConfs(2000000L))
+    assert(s.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor") == "2")
+    val v = caller.range(4).toDF("id")
+    val e = caller.createDataFrame(Seq((0L, 1L), (2L, 3L))).toDF("src", "dst")
+    assert(Algorithms.connectedComponents(v, e).count() == 4L)
+    assert(caller.conf.getAll == before)
+  }
+
+  test("a temp view redefined between two Pregel runs is seen by the " +
+      "second run") {
+    val view = "pregel_spec_vertices"
+    val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    def maxValue(): Set[Long] = Algorithms.maxValuePropagation(
+        spark.table(view), e, maxIter = 4).vertices
+      .select("value").as[Long].collect().toSet
+    try {
+      Seq((0L, 3L), (1L, 5L)).toDF("id", "value").createOrReplaceTempView(view)
+      assert(maxValue() == Set(5L))
+      Seq((0L, 7L), (1L, 2L)).toDF("id", "value").createOrReplaceTempView(view)
+      assert(maxValue() == Set(7L))
+    } finally spark.catalog.dropTempView(view)
+  }
+
   test("triangle counts: known graph, normalization of dups/direction/loops") {
     // two disjoint triangles {1,2,3} and {4,5,6} bridged by 3-4; edge 1-2
     // appears duplicated AND reversed, plus a self-loop — all must

@@ -18,6 +18,8 @@ object SparkTestBase {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .config("spark.sql.codegen.cache.maxEntries",
+        LocalSession.codegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // same optimizer extension as LocalSession: the suites must exercise
