@@ -43,6 +43,18 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** `df` with a size guard fused into its plan: the action that reads it
+    * fails with `remediation` once `df` holds more than `cap` rows. The
+    * count is a scalar subquery over at most cap+1 rows (limit before
+    * count), run by that action, so a violating caller pays a bounded
+    * probe and building the plan starts no Spark job — the same
+    * execution-time failure as [[sortedNeighborhoodPairs]]' catalog
+    * guard. An empty `df` never evaluates the guard. */
+  private def sizeGuarded(df: DataFrame, cap: Int,
+                          remediation: String): DataFrame =
+    df.filter(when(df.limit(cap + 1).select(count(lit(1))).scalar() > cap,
+      raise_error(lit(remediation))).otherwise(lit(true)))
+
   /** Brute-force cosine top-k: every query against every corpus vector,
     * ranked per query on the rounded cosine. `queries` is broadcast — the
     * corpus is never shuffled; the only shuffle is the two-phase top-k on
@@ -50,17 +62,17 @@ object Similarity {
     * while the query side fits a broadcast. `maxQueryRows` makes that
     * precondition a loud failure instead of a driver OOM: a 10M-row query
     * set must go through [[annCosineTopK]] (or a corpus⋈corpus shuffle
-    * join), not through this operator with a bigger cap. The guard reads
-    * at most cap+1 rows (limit before count), so a violating caller pays
-    * a bounded probe, never a full scan of the oversized side. */
+    * join), not through this operator with a bigger cap. The guard is
+    * [[sizeGuarded]]: it fails the first action, and building the plan
+    * runs no job. */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                  maxQueryRows: Int = 500000): DataFrame = {
-    require(queries.limit(maxQueryRows + 1).count() <= maxQueryRows,
+    val q = sizeGuarded(queries, maxQueryRows,
       s"cosineTopK broadcasts the query side: more than " +
         s"$maxQueryRows rows — use annCosineTopK for large query sets")
     val pairs = corpus.withColumn("nv", norm(col("v")))
-      // bcast-ok: query side, size-guarded by the maxQueryRows require above
-      .crossJoin(broadcast(queries.withColumn("nq", norm(col("qv")))))
+      // bcast-ok: query side, size-guarded by sizeGuarded above
+      .crossJoin(broadcast(q.withColumn("nq", norm(col("qv")))))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos",
         round(dot(col("qv"), col("v")) / (col("nq") * col("nv")), 6))
@@ -1176,7 +1188,10 @@ object Similarity {
     * executes a Spark job (the distinct-value count) even if the returned
     * DataFrame is never acted on — unlike the module's otherwise-lazy
     * plan builders — and the persisted values frame stays registered in
-    * [[graft.CacheRegistry]] until the caller's next unpersistAll.
+    * [[graft.CacheRegistry]] until the caller's next unpersistAll. The
+    * probe is not a size guard, so it does not become a fused
+    * `raise_error` like [[cosineTopK]]'s: it picks the join strategy,
+    * and q116's plan pin needs the broadcast hint it decides.
     * Ties break on (distance, neighbor value) so the answer is
     * deterministic. Singleton blocks yield NULL neighbors, never a
     * fabricated match. */
@@ -1900,13 +1915,13 @@ object Similarity {
   def marginPairs(a: DataFrame, b: DataFrame, k: Int,
                   tauNum: Long = 105, tauDen: Long = 100,
                   maxSideRows: Int = 500000): DataFrame = {
-    require(b.limit(maxSideRows + 1).count() <= maxSideRows,
+    val bSide = sizeGuarded(b, maxSideRows,
       s"marginPairs broadcasts the B side: more than $maxSideRows rows — " +
         "swap candidate generation onto annCosineTopK for large corpora")
     val pairs = graft.CacheRegistry.persist(
       a.withColumn("an", norm(col("av")))
-        // bcast-ok: B side, size-guarded by the maxSideRows require above
-        .crossJoin(broadcast(b.withColumn("bn", norm(col("bv")))))
+        // bcast-ok: B side, size-guarded by sizeGuarded above
+        .crossJoin(broadcast(bSide.withColumn("bn", norm(col("bv")))))
         .withColumn("c6",
           round(round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 6)
             * 1000000).cast("long"))

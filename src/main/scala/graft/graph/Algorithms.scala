@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSessionBridge
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** The reference's two golden vertex programs on the [[Pregel]] loop. */
@@ -153,18 +155,16 @@ object Algorithms {
     * each half-round is one groupBy(min) on node id plus one equi-join
     * back, everything edge-partitioned; a high-degree hub is ONE group in
     * a partial-aggregated min, not a window. Convergence is detected by
-    * an (edge-count, hash-sum) checksum going stable — one tiny action
-    * per round, against Pregel's full-materialization halt vote. Lineage
-    * is cut with a lazy localCheckpoint every 3 rounds, as in [[Pregel]].
+    * an (edge-count, hash-sum) checksum going stable: the probe of each
+    * round's [[Pregel.advance]]. The result reads the last round's
+    * checkpoint, the only one a finished run keeps.
     */
   def ccAlternating(vertices: DataFrame, edges: DataFrame,
                     maxRounds: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = vertices.sparkSession
     // canonical undirected edge set: deduped, self-loops dropped,
     // stored big -> small (one small-star's precondition, and exactly
     // what large-star emits)
-    var e = edges
+    val canonical = edges
       .select(col("src").as("u"), col("dst").as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
@@ -177,10 +177,10 @@ object Algorithms {
     // tasks of pure scheduler overhead (measured 19s → ~4s on the q112
     // corpus at local[32]). Size the loop shuffles to the edge count; the
     // AQE settings are ccLoopConfs' size gate.
-    val nE = e.count() // also materializes the edge cache
-    val (loopSession, _) = Pregel.loopSession(spark, nE, confs = ccLoopConfs(nE))
-    e = org.apache.spark.sql.graft.GraftSessionBridge.rebind(e, loopSession)
-    val live = scala.collection.mutable.ArrayBuffer(e)
+    val nE = canonical.count() // also materializes the edge cache
+    val (loopSession, _) = Pregel.loopSession(vertices.sparkSession, nE,
+      confs = ccLoopConfs(nE))
+    var e = GraftSessionBridge.rebind(canonical, loopSession)
     try {
       var prev = (-1L, 0L)
       var round = 0
@@ -214,14 +214,10 @@ object Algorithms {
           .select(col("v").as("u"), col("m").as("v"))
           .union(ssMin.select(col("u"), col("m").as("v")))
           .distinct()
-        val ss = (if ((round + 1) % 3 == 0) ssRaw.localCheckpoint(false)
-                  else ssRaw).persist(StorageLevel.MEMORY_AND_DISK)
-        live += ss
         // (count, xor-of-hashes): order-independent, overflow-free under
         // ANSI; the rows are distinct so this is a set checksum
-        // collect-ok: 1-row global aggregate — the loop's convergence probe
-        val chk = ss.agg(count(lit(1)),
-          bit_xor(xxhash64(col("u"), col("v")))).head()
+        val (ss, chk) = Pregel.advance(Option.when(round > 0)(e), ssRaw,
+          count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))))
         val cur = (chk.getLong(0), if (chk.isNullAt(1)) 0L else chk.getLong(1))
         done = cur == prev
         prev = cur
@@ -233,9 +229,7 @@ object Algorithms {
           Seq("id"), "left_outer")
         .select(col("id"),
           coalesce(col("component"), col("id")).as("component"))
-        // sever from the to-be-unpersisted round frames
-        .localCheckpoint(true)
-    } finally live.foreach(_.unpersist(false))
+    } finally canonical.unpersist(false)
   }
 
   /** TrustRank (Gyöngyi et al., VLDB'04): PageRank with the teleport mass
@@ -466,73 +460,64 @@ object Algorithms {
     * wordcount shuffle shape; a power-law hub key partial-aggregates
     * map-side like any hot groupBy key) and ONE 1-row max broadcast —
     * the q153 argmax discipline: the corpus-sized frame is never
-    * reshuffled to learn the normalizer. Each iterate `localCheckpoint`s
-    * (Pregel's lineage cadence): every normalize references its raw frame
+    * reshuffled to learn the normalizer. Each half-step's raw scores go
+    * through [[Pregel.advance]]: every normalize references its raw frame
     * TWICE (the scores and the max), so an uncut plan would double per
     * half-step — 2²⁴ nodes by iteration 12, OOM in plan stringification
-    * long before execution cost matters.
+    * long before execution cost matters. The result reads only the last
+    * hub and authority checkpoints, the two a finished run keeps.
     *
-    * Memory: the run pins TWO full copies of the edge set (one per join
-    * orientation, below) — twice the edge cache of a single-orientation
-    * loop. A caller whose graph crowds executor memory can trade one
-    * orientation back for an edge-side Exchange per half-step. */
+    * Memory: while it runs, the loop caches TWO full copies of the edge
+    * set (one per join orientation, below). A caller whose graph crowds
+    * executor memory can trade one orientation back for an edge-side
+    * Exchange per half-step. Not a [[Pregel.run]]: alternating the edge
+    * direction there would double every superstep's join input. */
   def hits(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    // One edge cache per join orientation, each hash-partitioned on the
-    // key its half-step joins on (the Pregel loop's edge-cache
-    // discipline): the auth step attaches hub scores along src, the hub
-    // step attaches auth scores along dst, and both repeat `iters`
-    // times, so two pre-partitioned caches make every per-iteration
-    // edge-side Exchange disappear. The score frames are hash(id) from
-    // their own aggregation (checkpoint preserves it), and `ids` is
-    // pre-partitioned too, so each half-step's only exchange is its
-    // partial-aggregated groupBy.
-    val eSrc = graft.CacheRegistry.persist(
-      edges.select(col("src"), col("dst"), col("w")).repartition(col("src")))
-    val eDst = graft.CacheRegistry.persist(
-      edges.select(col("src"), col("dst"), col("w")).repartition(col("dst")))
-    val ids = graft.CacheRegistry.persist(
-      vertices.select(col("id")).repartition(col("id")))
-    def normalized(raw: DataFrame): DataFrame = {
-      val r = graft.CacheRegistry.persist(raw)
-      val m = r.agg(max(col("raw")).as("m"))
-      // bcast-ok: m is a 1-row global max aggregate
-      r.crossJoin(broadcast(m))
-        .select(col("id"),
-          when(col("m") > 0, col("raw") / col("m")).otherwise(lit(0.0))
-            .as("score"))
-        .localCheckpoint()
-    }
-    // Contributions aggregate on the edge⋈score join output BEFORE
-    // meeting the vertex list (guide §2.3 "aggregate before you
-    // shuffle"): the old shape carried |E| rows through ids⋈e and then
-    // re-shuffled them to attach scores — two |E|-row exchanges per
-    // half-step. Equivalent row-for-row: every edge endpoint that exists
-    // in `ids` has a score row (scores are seeded from ids), a missing
-    // score could only null the product, and sum skips nulls — so the
-    // inner join + left re-attach with coalesce(0) computes exactly the
-    // old coalesce(sum, 0) per vertex, including zero-degree vertices.
-    var hub = ids.select(col("id"), lit(1.0).as("score"))
-    var auth = ids.select(col("id"), lit(1.0).as("score"))
-    for (_ <- 1 to iters) {
-      auth = normalized(
-        ids.join(
-          eSrc.join(hub.select(col("id").as("hid"), col("score").as("h")),
-              col("src") === col("hid"))
-            .groupBy(col("dst").as("id"))
-            .agg(sum(col("w") * col("h")).as("raw0")),
-          Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("raw0"), lit(0.0)).as("raw")))
-      hub = normalized(
-        ids.join(
-          eDst.join(auth.select(col("id").as("aid"), col("score").as("a")),
-              col("dst") === col("aid"))
-            .groupBy(col("src").as("id"))
-            .agg(sum(col("w") * col("a")).as("raw0")),
-          Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("raw0"), lit(0.0)).as("raw")))
-    }
-    hub.select(col("id"), col("score").as("hub"))
-      .join(auth.select(col("id"), col("score").as("auth")), Seq("id"))
+    // One edge cache per join orientation, hash-partitioned on the key its
+    // half-step joins on (Pregel's edge-cache discipline): auth attaches
+    // hub scores along src, hub attaches auth scores along dst. The score
+    // checkpoints keep their aggregation's hash(id) partitioning and `ids`
+    // is pre-partitioned, so a half-step's only exchange is its groupBy.
+    val eSrc = edges.select(col("src"), col("dst"), col("w"))
+      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    val eDst = edges.select(col("src"), col("dst"), col("w"))
+      .repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+    val ids = vertices.select(col("id")).repartition(col("id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // A half-step's raw scores, advanced. Contributions aggregate on the
+    // edge⋈score join output BEFORE meeting the vertex list (guide §2.3):
+    // every edge endpoint in `ids` has a score row and sum skips nulls, so
+    // the left re-attach with coalesce(0) also covers zero-degree vertices.
+    def step(prev: Option[DataFrame], e: DataFrame, scores: DataFrame,
+             along: String, to: String): DataFrame =
+      Pregel.advance(prev, ids.join(
+        e.join(scores.select(col("id").as("sid"), col("score").as("s")),
+            col(along) === col("sid"))
+          .groupBy(col(to).as("id"))
+          .agg(sum(col("w") * col("s")).as("raw0")),
+        Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("raw0"), lit(0.0)).as("raw")),
+        count(lit(1)))._1
+    // The normalizer stays a column: collected, it would be a double
+    // literal inlined into generated code, new classes every iterate.
+    def scores(raw: Option[DataFrame]): DataFrame =
+      raw.fold(ids.select(col("id"), lit(1.0).as("score"))) { r =>
+        // bcast-ok: a 1-row global max aggregate
+        r.crossJoin(broadcast(r.agg(max(col("raw")).as("m"))))
+          .select(col("id"),
+            when(col("m") > 0, col("raw") / col("m")).otherwise(lit(0.0))
+              .as("score"))
+      }
+    try {
+      var hub, auth: Option[DataFrame] = None
+      for (_ <- 1 to iters) {
+        auth = Some(step(auth, eSrc, scores(hub), "src", "dst"))
+        hub = Some(step(hub, eDst, scores(auth), "dst", "src"))
+      }
+      scores(hub).select(col("id"), col("score").as("hub"))
+        .join(scores(auth).select(col("id"), col("score").as("auth")),
+          Seq("id"))
+    } finally Seq(eSrc, eDst, ids).foreach(_.unpersist(false))
   }
 
   val hitsIters = 12
@@ -1045,24 +1030,29 @@ object Algorithms {
     *
     * Scale shape: every engine-side step is graph-sized — degree
     * semi-joins for trim, two Pregel min-propagations, one settle join;
-    * the O(n²) closure exists ONLY in the DuckDB oracle. Per-round
-    * frames are localCheckpointed or the loop would stack two Pregel
-    * lineages per round onto the next round's plan. */
+    * the O(n²) closure exists ONLY in the DuckDB oracle. Each round the
+    * labels (`scc_id`, null while open) and the remaining edges go
+    * through [[Pregel.advance]], or the loop would stack two Pregel
+    * lineages per round onto the next round's plan; the labels' probe
+    * counts the open vertices. A finished run keeps one checkpoint, its
+    * result, and an empty graph yields an empty result. Ids come back
+    * BIGINT. */
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
                                   maxRounds: Int = 20,
                                   propIter: Int = 20): DataFrame = {
-    var remaining = vertices.select(col("id")).localCheckpoint()
-    var rem = edges.select(col("src"), col("dst")).localCheckpoint()
-    var settled: Option[DataFrame] = None
+    val open = col("scc_id").isNull
+    var (labels, left) = Pregel.advance(None, vertices.select(
+      col("id").cast("long").as("id"), lit(null).cast("long").as("scc_id")),
+      count(when(open, lit(1))))
+    var rem = Pregel.advance(None, edges.select(col("src"), col("dst")),
+      count(lit(1)))._1
     var round = 0
-    while (round < maxRounds && !remaining.isEmpty) {
-      val core = remaining
+    while (round < maxRounds && left.getLong(0) > 0) {
+      val core = labels.filter(open).select(col("id"))
         .join(rem.select(col("src").as("id")).distinct(), Seq("id"),
           "left_semi")
         .join(rem.select(col("dst").as("id")).distinct(), Seq("id"),
           "left_semi")
-      val trimmed = remaining.join(core, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("scc_id"))
       val enc = core.select((col("id") * 2).as("id"))
         .unionByName(core.select((col("id") * 2 + 1).as("id")))
       val encEdges = rem
@@ -1075,23 +1065,27 @@ object Algorithms {
         .join(cc.filter(pmod(col("id"), lit(2)) === 1)
           .select(expr("id div 2").as("id"),
             expr("component div 2").as("bwd")), Seq("id"))
-      val settledRound = trimmed
-        .unionByName(fb.filter(col("fwd") === col("bwd"))
-          .select(col("id"), col("fwd").as("scc_id")))
-      settled = Some(settled.fold(settledRound)(_.unionByName(settledRound)))
-      remaining = fb.filter(col("fwd") =!= col("bwd")).select(col("id"))
-        .localCheckpoint()
-      rem = rem
-        .join(remaining.withColumnRenamed("id", "src"), Seq("src"),
-          "left_semi")
-        .join(remaining.withColumnRenamed("id", "dst"), Seq("dst"),
-          "left_semi")
-        .localCheckpoint()
+      // an open vertex outside the core (no fwd label) is trimmed: its own
+      // singleton SCC; a core vertex settles when fwd = bwd
+      val (next, n) = Pregel.advance(Some(labels),
+        labels.join(fb, Seq("id"), "left_outer").select(col("id"),
+          coalesce(col("scc_id"), when(col("fwd").isNull, col("id"))
+            .when(col("fwd") === col("bwd"), col("fwd"))).as("scc_id")),
+        count(when(open, lit(1))))
+      GraftSessionBridge.dropCheckpoint(cc)
+      labels = next
+      left = n
+      val opened = labels.filter(open).select(col("id"))
+      rem = Pregel.advance(Some(rem), rem
+        .join(opened.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(opened.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi"),
+        count(lit(1)))._1
       round += 1
     }
-    require(remaining.isEmpty,
+    GraftSessionBridge.dropCheckpoint(rem)
+    require(left.getLong(0) == 0,
       s"SCC did not settle within $maxRounds rounds")
-    settled.get
+    labels
   }
 
   /** Directed test graph: one ring per region (5 five-cycle SCCs) plus a

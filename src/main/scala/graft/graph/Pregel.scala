@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSessionBridge
 import org.apache.spark.storage.StorageLevel
@@ -39,9 +39,9 @@ final case class PregelResult(vertices: DataFrame, supersteps: Int)
   *
   * Scale design: vertices and messages both hash-partition on `id`, so the
   * post-aggregation join can reuse the exchange; every block of supersteps
-  * ends in ONE lazy `localCheckpoint`, which truncates lineage — without it
-  * the join-per-iteration plan grows exponentially and kills the driver
-  * long before 100 TB kills the executors. The loop additionally sizes its
+  * ends in ONE [[advance]], which truncates lineage — without it the
+  * join-per-iteration plan grows exponentially and kills the driver long
+  * before 100 TB kills the executors. The loop additionally sizes its
   * shuffle partitions to the graph (see [[loopSession]]) and can batch
   * `blockSize` supersteps per plan to amortize Catalyst's fixed planning
   * cost — the two costs that dominate iterative dataflow once per-task
@@ -102,6 +102,30 @@ object Pregel {
     val s = GraftSessionBridge.withConfs(spark,
       ("spark.sql.shuffle.partitions" -> loopParts.toString) +: confs)
     (s, loopParts)
+  }
+
+  /** The library's one lineage-cut step for eager loops (remap's swapped
+    * message buffers): `next` becomes a lazy local checkpoint that the job
+    * computing `next.agg(probe, more: _*)` materializes whole, and then
+    * `prev`, the generation it replaces, is freed now rather than at a
+    * later driver GC — so `prev` must be a checkpoint that nothing still
+    * unmaterialized reads. The probe is an aggregate, so it scans every
+    * partition: a `limit`/`isEmpty` probe could stop early and leave the
+    * checkpoint half-built, for the next step to recompute silently from
+    * lineage. It is planned without AQE, under which its one-partition
+    * exchange would be a job of its own. Returns the checkpoint and the
+    * probe's row. */
+  private[graft] def advance(prev: Option[DataFrame], next: DataFrame,
+                             probe: Column, more: Column*): (DataFrame, Row) = {
+    val cp = next.localCheckpoint(false)
+    val aqe = "spark.sql.adaptive.enabled"
+    val plain = if (!cp.sparkSession.conf.get(aqe).toBoolean) cp
+      else GraftSessionBridge.rebind(cp,
+        GraftSessionBridge.withConfs(cp.sparkSession, Seq(aqe -> "false")))
+    // collect-ok: one-row global aggregate — the loop's probe
+    val row = plain.agg(probe, more: _*).head()
+    prev.foreach(GraftSessionBridge.dropCheckpoint)
+    (cp, row)
   }
 
   /** Durable-checkpoint support: a long Pregel run (hundreds of supersteps
@@ -198,11 +222,10 @@ object Pregel {
     // anywhere — including setup (materializing the edge cache can run a
     // whole dedup pipeline for q47) — unpersists in the finally
     try {
-    var v = vertices.localCheckpoint(true)
+    var (v, vRows) = advance(None, vertices, count(lit(1)))
     val nEdges = e.count() // also materializes the edge cache
-    val nVerts = v.count() // cheap: v is checkpointed
-    val (session, loopParts) =
-      loopSession(spark, math.max(nVerts, nEdges), rowsPerPartition)
+    val (session, loopParts) = loopSession(spark,
+      math.max(vRows.getLong(0), nEdges), rowsPerPartition)
     def inLoop(df: DataFrame): DataFrame = GraftSessionBridge.rebind(df, session)
 
     // Re-cache the edges HASH-PARTITIONED AND SORTED on `src`, the
@@ -227,11 +250,8 @@ object Pregel {
       e.unpersist(false)
       c
     }
-    if (v.queryExecution.toRdd.getNumPartitions > 2 * loopParts) {
-      val c = v.coalesce(loopParts).localCheckpoint(true)
-      GraftSessionBridge.dropCheckpoint(v)
-      v = c
-    }
+    if (v.queryExecution.toRdd.getNumPartitions > 2 * loopParts)
+      v = advance(Some(v), v.coalesce(loopParts), count(lit(1)))._1
     v = inLoop(v)
     var step = startStep
     var allHalt = false
@@ -258,31 +278,14 @@ object Pregel {
       }
       step += block
 
-      // One materialization per block: a LAZY local checkpoint, which the
-      // durable write or the halt action below materializes in the same
-      // Spark job — an eager checkpoint would run a second job per block
-      // for nothing.
-      val prev = v
-      v = cur.localCheckpoint(false)
+      // the halt vote (or a row count) materializes the block; an empty
+      // frame is a vacuous halt, and the durable write reads the block
+      val (next, vote) = advance(Some(v), cur,
+        if (voteToHalt) coalesce(bool_and(col("halt")), lit(true))
+        else count(lit(1)))                             // action → barrier
+      v = next
+      allHalt = voteToHalt && vote.getBoolean(0)
       durableDir.foreach(writeDurable(v, _, step))
-      // The halt vote is an AGGREGATE, not filter(...).isEmpty: isEmpty is
-      // a limit(1) that can stop after the first non-halting partition,
-      // leaving this block's checkpoint partially materialized — the next
-      // block would then silently recompute the missing partitions from
-      // lineage. bool_and scans every partition, so the same job that
-      // answers the vote also finishes the materialization (empty frame →
-      // vacuous halt).
-      allHalt =
-        if (voteToHalt)
-          // collect-ok: 1-row bool_and aggregate — the BSP halt vote
-          v.agg(coalesce(bool_and(col("halt")), lit(true)))
-            .head().getBoolean(0)                       // action → barrier
-        else { v.count(); false }                       // action → barrier
-      // v is whole and its lineage cut, so the generation it was computed
-      // from is dead: free its blocks now. Left to the ContextCleaner, a
-      // superseded generation stays on the executors until a driver GC
-      // happens to find it, which is after the run on a quiet heap.
-      GraftSessionBridge.dropCheckpoint(prev)
     }
 
     // v is already a checkpoint: hand it back on the CALLER's session

@@ -89,15 +89,22 @@ object GraftSessionBridge {
 
   /** Free the blocks of the local checkpoint that `df` reads, now rather
     * than when the driver's next GC lets the ContextCleaner find the dead
-    * RDD. Only for a checkpoint nothing reads again: its lineage is cut,
-    * so it cannot be recomputed. (`RDD.unpersist` does the same, but logs
-    * a warning for every local checkpoint.) */
-  def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
+    * RDD. `df` is the checkpoint or a projection of it (a Pregel result
+    * without its `halt` column); any other plan is left alone. Only for a
+    * checkpoint nothing reads again: its lineage is cut, so it cannot be
+    * recomputed. (`RDD.unpersist` does the same, but logs a warning for
+    * every local checkpoint.) */
+  def dropCheckpoint(df: DataFrame): Unit = {
+    @scala.annotation.tailrec
+    def drop(p: LogicalPlan): Unit = p match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case org.apache.spark.sql.catalyst.plans.logical.Project(_, child) =>
+        drop(child)
       case _ =>
     }
+    drop(df.queryExecution.analyzed)
+  }
 
   /** How many clones [[withConfs]] keeps for `spark`. */
   private[graft] def sessionCount(spark: SparkSession): Int =

@@ -161,6 +161,64 @@ class GraftPropertiesSpec extends GraftSuite {
     }
   }
 
+  test("property: weightedNgramJaccardPairs equals brute-force multiset " +
+      "Jaccard") {
+    // each document repeats one of two short templates 1–4 times plus a
+    // tail of at most one word: 3-shingles repeat inside a document, so
+    // the bag counts, not only the distinct sets, decide the ratios (T×2
+    // against T×3 is 0.6, not 1.0), and documents built from one template
+    // land on both sides of the threshold (T×1 against T×2 is 0.33)
+    val vocab = Vector("w0", "w1", "w2", "w3", "w4")
+    val doc = (templates: Seq[Seq[String]]) => for {
+      tpl <- Gen.oneOf(templates)
+      reps <- Gen.choose(1, 4)
+      tail <- Gen.choose(0, 1).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
+    } yield (Seq.fill(reps)(tpl).flatten ++ tail).mkString(" ")
+    val gen = for {
+      templates <- Gen.listOfN(2, Gen.listOfN(4, Gen.oneOf(vocab)))
+      nd <- Gen.choose(8, 12)
+      docs <- Gen.listOfN(nd, doc(templates))
+    } yield docs
+    def bag(text: String): Map[String, Int] = {
+      val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+      val sh =
+        if (toks.length >= 3) toks.sliding(3).map(_.mkString(" ")).toSeq
+        else Seq(toks.mkString(" "))
+      sh.groupBy(identity).view.mapValues(_.size).toMap
+    }
+    val t = 0.5
+    var rows, bagOnly = 0
+    for (s <- 1L to 3L) {
+      val docs = sample(gen, s).zipWithIndex.map { case (txt, i) => (i.toLong, txt) }
+      val got = Dedup.weightedNgramJaccardPairs(
+          docs.toDF("doc_id", "text"), "doc_id", "text", 3, t)
+        .select("id_a", "id_b", "inter", "n_a", "n_b", "wjaccard6").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getDouble(5))).toSet
+      val expected = (for {
+        (a, ta) <- docs; (b, tb) <- docs if a < b
+        ba = bag(ta); bb = bag(tb)
+        inter = ba.keySet.intersect(bb.keySet).toSeq
+          .map(g => math.min(ba(g), bb(g))).sum.toLong
+        na = ba.values.sum.toLong; nb = bb.values.sum.toLong
+        // Σmin / Σmax, with Σmax = n_a + n_b − Σmin
+        wj = (BigDecimal(inter) / BigDecimal(na + nb - inter))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        if wj >= t
+      } yield (a, b, inter, na, nb, wj)).toSet
+      assert(got == expected, s"seed $s")
+      rows += got.size
+      // pairs whose set Jaccard differs: the multiplicities mattered
+      bagOnly += expected.count { case (a, b, _, _, _, wj) =>
+        val (sa, sb) = (bag(docs(a.toInt)._2).keySet, bag(docs(b.toInt)._2).keySet)
+        wj != (BigDecimal((sa & sb).size) / BigDecimal((sa | sb).size))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
+    }
+    assert(rows > 0, "no pair reached the threshold on any seed — vacuous")
+    assert(bagOnly > 0, "no pair where the bag counts change the ratio")
+  }
+
   test("property: trustRank seeded with EVERY vertex degenerates to pageRank") {
     // with S = V the teleport vector is uniform 1/N — TrustRank's update
     // rule becomes PageRank's exactly; the two code paths build the

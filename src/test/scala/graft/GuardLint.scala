@@ -13,7 +13,8 @@ import scala.util.Using
   * [[ListenerGuardSpec]] reads each file's code with its comments
   * stripped ([[code]]) to count the `SparkListener`s in `src/main`, as
   * [[SessionCloneGuardSpec]] does to keep `cloneSession` calls inside
-  * `GraftSessionBridge`.
+  * `GraftSessionBridge` and [[CheckpointGuardSpec]] to keep
+  * `localCheckpoint` inside `Pregel.advance`.
   *
   * Two correctness details live here so every guard gets them at once:
   *

@@ -158,19 +158,59 @@ class PregelSpec extends GraftSuite {
     assert(compiled == 0, s"the warm run compiled $compiled classes")
   }
 
-  test("a Pregel run leaves only its result's checkpoint persisted") {
-    // 30 one-superstep blocks make 30 checkpoint generations; each one is
-    // freed once the next is materialized, not at some later driver GC
-    val v = Seq((0L, 0L), (1L, 0L)).toDF("id", "value")
-    val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.keys.toSet
-    val res = Pregel.run(v, e, maxIter = 30,
-      sendMsg = col("value") + 1, mergeMsg = max,
-      vprog = (df, _) => df.select(col("id"),
-        greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")))
-    val left = spark.sparkContext.getPersistentRDDs.keys.toSet -- before
-    assert(left.size <= 1, s"persisted RDDs left by the run: $left")
-    assert(res.vertices.select("value").as[Long].collect().forall(_ >= 29L))
+  // Every eager graph loop cuts lineage through Pregel.advance, so a run
+  // leaves only the checkpoints its result reads persisted: each
+  // superseded generation is freed once the next one is materialized, not
+  // at some later driver GC, and no per-iteration frame is left in
+  // CacheRegistry. Counted while the result is still referenced.
+  private def ring(n: Long) =
+    (0L until n).map(i => (i, (i + 1) % n)).toDF("src", "dst")
+
+  Seq[(String, Int, () => org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame => Unit)](
+    ("a Pregel run leaves only its result's checkpoint persisted", 1, () => {
+      // 30 one-superstep blocks make 30 checkpoint generations
+      val v = Seq((0L, 0L), (1L, 0L)).toDF("id", "value")
+      val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+      Pregel.run(v, e, maxIter = 30,
+        sendMsg = col("value") + 1, mergeMsg = max,
+        vprog = (df, _) => df.select(col("id"),
+          greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")))
+        .vertices
+    }, res => assert(res.select("value").as[Long].collect().forall(_ >= 29L))),
+    ("hits leaves only its last two score checkpoints persisted", 2, () => {
+      // 8 half-steps over a 9-vertex star: leaves 1..8 point at center 0
+      val v = (0L until 9L).toDF("id")
+      val e = (1L until 9L).map(i => (i, 0L)).toDF("src", "dst")
+        .withColumn("w", lit(1.0))
+      Algorithms.hits(v, e, iters = 4)
+    }, res => assert(res.collect().map(r => r.getLong(0) ->
+      ((r.getDouble(1), r.getDouble(2)))).toMap ==
+      ((1L until 9L).map(_ -> ((1.0, 0.0))) :+ (0L -> ((0.0, 1.0)))).toMap)),
+    ("stronglyConnectedComponents leaves only its result's checkpoint " +
+        "persisted", 1, () => {
+      // ring {0..3} feeds ring {4..6} one way: two rounds settle them
+      val e = ring(4).union(ring(3).select(col("src") + 4, col("dst") + 4))
+        .union(Seq((3L, 4L)).toDF("src", "dst"))
+      Algorithms.stronglyConnectedComponents((0L until 7L).toDF("id"), e,
+        maxRounds = 4, propIter = 12)
+    }, res => assert(res.collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap == (0L until 7L).map(i => i -> (if (i < 4) 0L else 4L)).toMap)),
+    ("ccAlternating leaves only its result's checkpoint persisted", 1,
+      () => Algorithms.ccAlternating((0L until 8L).toDF("id"), ring(8)),
+      res => assert(res.select("component").as[Long].collect().toSeq ==
+        Seq.fill(8)(0L)))
+  ).foreach { case (name, maxLeft, run, check) =>
+    test(name) {
+      val before = spark.sparkContext.getPersistentRDDs.keys.toSet
+      val tracked = CacheRegistry.trackedCount
+      val res = run()
+      val left = spark.sparkContext.getPersistentRDDs.keys.toSet -- before
+      assert(left.size <= maxLeft, s"persisted RDDs left by the run: $left")
+      assert(CacheRegistry.trackedCount <= tracked,
+        "the run left frames in CacheRegistry")
+      check(res)
+    }
   }
 
   test("loopSession: the same caller conf and overrides give the same " +

@@ -432,6 +432,40 @@ class SimilaritySpec extends GraftSuite {
     assert(messages(e).exists(_.contains("distinct blocks")), e.toString)
   }
 
+  test("cosineTopK and marginPairs build without a Spark job; an oversized " +
+      "broadcast side fails at the action with the remediation") {
+    // range sources: a local Seq folds into a LocalRelation, whose counts
+    // the optimizer answers without a job
+    val vecs = spark.range(3).select(col("id"),
+      array(col("id").cast("double"), lit(1.0)).as("v"))
+    val corpus = vecs.select(col("id").as("vec_id"), col("v"))
+    val queries = vecs.select((col("id") + 10).as("qid"), col("v").as("qv"))
+    val a = vecs.select(col("id").as("aid"), col("v").as("av"))
+    val b = vecs.select((col("id") + 10).as("bid"), col("v").as("bv"))
+    def jobs(body: => Unit): Int =
+      org.apache.spark.sql.graft.SparkJobs.onThisThread(spark)(body)
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    var top, margin: org.apache.spark.sql.DataFrame = null
+    assert(jobs { top = Similarity.cosineTopK(corpus, queries, 2,
+      maxQueryRows = 2) } == 0)
+    assert(jobs { margin = Similarity.marginPairs(a, b, 2,
+      maxSideRows = 2) } == 0)
+    val e1 = intercept[Exception](top.collect())
+    assert(messages(e1).exists(_.contains("cosineTopK broadcasts the query " +
+      "side: more than 2 rows — use annCosineTopK for large query sets")),
+      e1.toString)
+    val e2 = intercept[Exception](margin.collect())
+    assert(messages(e2).exists(_.contains("marginPairs broadcasts the B " +
+      "side: more than 2 rows — swap candidate generation onto " +
+      "annCosineTopK for large corpora")), e2.toString)
+    // at the cap the guard lets the same sides through
+    assert(Similarity.cosineTopK(corpus, queries, 2, maxQueryRows = 3)
+      .count() == 6)
+    assert(Similarity.marginPairs(a, b, 2, maxSideRows = 3).count() > 0)
+  }
+
   test("marginPairs keeps standout pairs, drops neighborhood-average ones") {
     // a1=(1,0) matches b1 exactly; a2=diag matches b3=diag exactly; the
     // 45°-apart pairs score cos .707107 — above any absolute threshold a
